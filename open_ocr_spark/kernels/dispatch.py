@@ -25,6 +25,7 @@ plain text.
 from __future__ import annotations
 
 import json
+import re
 
 from open_ocr_spark.kernels.html_extract import extract_main_text
 from open_ocr_spark.kernels.mock import MOCK_ENGINE_RESPONSE
@@ -58,13 +59,14 @@ MAX_DOC_BYTES = 20 * 1024 * 1024
 _DEFAULT_CHAIN = (PREPROCESSOR_CONVERT_PDF, PREPROCESSOR_STROKE_WIDTH)
 
 
+_PPM_HEADER_RE = re.compile(rb"P6\s+\d+\s+\d+\s+255\s")
+
+
 def _is_image_payload(payload: bytes) -> bool:
     """Raster-image detection for OCR routing. PNG/GIF/JPEG magics cannot
     occur in text; BMP and P6 get stricter checks (reserved NULs /
     header shape) so a PAGE whose text merely starts with "BM" or "P6"
     still routes to the HTML branch."""
-    import re as _re
-
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
         return True
     if payload[:6] in (b"GIF87a", b"GIF89a"):
@@ -77,7 +79,7 @@ def _is_image_payload(payload: bytes) -> bool:
         and payload[6:10] == b"\x00\x00\x00\x00"
     ):
         return True
-    return bool(_re.match(rb"P6\s+\d+\s+\d+\s+255\s", payload[:40]))
+    return bool(_PPM_HEADER_RE.match(payload[:40]))
 
 
 def _members_text(
@@ -195,6 +197,18 @@ def _apply_charset(payload: bytes, args) -> bytes | str:
     return payload.decode(codec, errors="replace")
 
 
+def _markup_text(payload: bytes, args, aggressive: bool) -> str:
+    """The HTML branch: main text, or in the "md" output format
+    (options.py markdown_output) structure-preserving markdown."""
+    if args.markdown_output:
+        from open_ocr_spark.kernels.html_markdown import html_to_markdown
+
+        return html_to_markdown(
+            _apply_charset(payload, args), aggressive=aggressive
+        )
+    return extract_main_text(_apply_charset(payload, args), aggressive=aggressive)
+
+
 def extract_document(
     html: bytes | None,
     lang: str | None = None,
@@ -295,7 +309,12 @@ def extract_document(
                 pass  # folded into the engine call's `aggressive` flag
 
         if text is None:
-            if is_pdf(payload):
+            if payload[:1] == b"<" and payload[257:262] != b"ustar":
+                # markup fast route: of the sniffs below only the tar
+                # header (magic at offset 257) can match a payload that
+                # opens with "<", so pages skip the rest of the ladder
+                text = _markup_text(payload, args, aggressive)
+            elif is_pdf(payload):
                 # no convert-pdf stage in the chain but payload is a PDF:
                 # the engine itself routes by magic bytes
                 try:
@@ -507,20 +526,8 @@ def extract_document(
                     text = ocr_image(payload)
                 except ValueError as exc:
                     return "", "error:ocr-unsupported", str(exc)
-            elif args.markdown_output:
-                # the "md" output format (options.py markdown_output):
-                # structure-preserving extraction for the HTML branch only
-                from open_ocr_spark.kernels.html_markdown import (
-                    html_to_markdown,
-                )
-
-                text = html_to_markdown(
-                    _apply_charset(payload, args), aggressive=aggressive
-                )
             else:
-                text = extract_main_text(
-                    _apply_charset(payload, args), aggressive=aggressive
-                )
+                text = _markup_text(payload, args, aggressive)
 
         if args.structured_output:
             return _spans_json(text), STATUS_OK, ""

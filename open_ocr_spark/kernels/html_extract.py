@@ -71,35 +71,37 @@ def _emit_paragraphs(node: Node, strip_boilerplate: bool) -> list[str]:
     """Walk the subtree in document order, flushing the running text buffer
     at block-element boundaries. Each paragraph is whitespace-collapsed;
     empty paragraphs are dropped. Frozen output policy: paragraphs joined
-    (by the caller) with exactly '\\n\\n'."""
+    (by the caller) with exactly '\\n\\n'.
+
+    Iterative, with an explicit stack, so nesting depth is bounded only by
+    memory: a ``None`` entry marks a flush, pushed under a block
+    element's children so that it runs when the block closes."""
     paragraphs: list[str] = []
     buf: list[str] = []
-
-    def flush():
-        text = collapse_ws("".join(buf))
-        buf.clear()
-        if text:
-            paragraphs.append(text)
-
-    def walk(cur: Node):
+    stack: list = [None, node]  # the bottom None is the final flush
+    while stack:
+        cur = stack.pop()
         if type(cur) is str:  # text runs are plain strings in children
             buf.append(cur)
-            return
-        if strip_boilerplate and cur.tag in BOILERPLATE_TAGS:
-            flush()
-            return
-        is_block = cur.tag in BLOCK_TAGS
-        if is_block:
-            flush()
-        if cur.tag == "br":
-            buf.append(" ")
-        for child in cur.children:
-            walk(child)
-        if is_block:
-            flush()
-
-    walk(node)
-    flush()
+            continue
+        if cur is not None:
+            tag = cur.tag
+            if strip_boilerplate and tag in BOILERPLATE_TAGS:
+                pass  # pruned: flush, and drop its subtree
+            elif tag in BLOCK_TAGS:
+                stack.append(None)
+                stack.extend(reversed(cur.children))
+            else:
+                if tag == "br":
+                    buf.append(" ")
+                stack.extend(reversed(cur.children))
+                continue
+        # a block boundary (or a pruned boilerplate subtree): flush
+        if buf:
+            text = collapse_ws("".join(buf))
+            buf.clear()
+            if text:
+                paragraphs.append(text)
     return paragraphs
 
 

@@ -1,4 +1,6 @@
-"""Minimal, deterministic HTML node tree built on stdlib html.parser.
+"""Minimal, deterministic HTML node tree: a regex tokenizer driven by one
+``re.split`` per page (``parse_html``, the extraction path) and a stdlib
+html.parser builder (``parse_html_stdlib``) that tests check it against.
 
 This is the graft's recast of the reference's external OCR binaries: where
 open-ocr shells out to ``tesseract`` per document
@@ -23,8 +25,11 @@ main-content roots are collected in document order at parse time
 from __future__ import annotations
 
 import codecs
+import html as _html
 import re
+from collections import defaultdict
 from html.parser import HTMLParser
+from operator import length_hint
 
 # --- charset sniff ----------------------------------------------------------
 # WHATWG "encoding sniffing algorithm", reduced to its deterministic core:
@@ -250,7 +255,7 @@ def fold_stats(root: Node) -> None:
             stack.append((node, in_link, True))
             for child in node.children:
                 if type(child) is str:
-                    n = collapsed_len(child)
+                    n = len(collapse_ws(child))
                     node.tlen += n
                     if child_in_link:
                         node.llen += n
@@ -282,138 +287,233 @@ def parse_html_stdlib(raw: bytes | str) -> Node:
 
 
 # --- fast tokenizer ---------------------------------------------------------
-# ~4× faster than html.parser because it never parses attributes (the
-# extractor reads none), never tracks source positions, and drives the
-# whole scan with one compiled-regex finditer (plus per-raw-text close
-# regexes). Same tolerant tree semantics: implicit closes, ignored
-# stray end tags, SKIP_TAGS subtrees dropped, entities unescaped.
+# Never parses attributes (the extractor reads none) and never builds a
+# Match object per token: one C-level ``_TOKEN_RE.split`` cuts the whole
+# page into text and token strings, and the loop in ``parse_html`` walks
+# that list. Same tolerant tree semantics as the stdlib builder: implicit
+# closes, ignored stray end tags, SKIP_TAGS subtrees dropped, entities
+# unescaped.
 
-import html as _html
-import re as _re
-
-_TOKEN_RE = _re.compile(
-    r"<!--.*?(?:-->|$)"              # comment
-    r"|<!\[CDATA\[.*?(?:\]\]>|$)"    # cdata
-    r"|<[!?][^>]*>?"                 # doctype / PI
-    r"|<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9:_.-]*)[^>]*?(/?)\s*>",  # tag
-    _re.S,
+# Groups: the whole token, then for tags the end-tag slash and the name.
+# ``split`` returns [text, token, slash, name, text, ...]; slash and name
+# are None for comments, CDATA, doctypes and PIs.
+_TOKEN_RE = re.compile(
+    r"(<!--.*?(?:-->|$)"                 # comment
+    r"|<!\[CDATA\[.*?(?:\]\]>|$)"        # cdata
+    r"|<[!?][^>]*>?"                     # doctype / PI
+    r"|<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9:_.-]*)[^>]*>)",  # tag
+    re.S,
 )
+_MARKUP_DECL_RE = re.compile(r"<[!?]")
 # raw-text elements: content runs to the matching close tag, never nested
 _RAWTEXT = {"script", "style", "textarea", "title", "noscript", "template"}
 _RAWTEXT_CLOSE = {
-    t: _re.compile(rf"</\s*{t}[^>]*>", _re.I) for t in _RAWTEXT
+    t: re.compile(rf"</\s*{t}[^>]*>", re.I) for t in _RAWTEXT
 }
+
+
+def _runs_on(tok: str) -> bool:
+    """True for a comment or CDATA token that ends at the end of its scan
+    window only because ``$`` matched there: over the whole input it
+    runs on past the window."""
+    if tok.startswith("<!--"):
+        return len(tok) < 7 or not tok.endswith("-->")
+    if tok.startswith("<![CDATA["):
+        return not tok.endswith("]]>")
+    return False
+
+
+def _tail_parts(raw: str, pos: int, start: int) -> list:
+    """Token blocks for ``raw[pos:]`` where ``raw[pos:start]`` is plain
+    text and ``raw[start:]`` holds no ``>`` that ends a token. No tag can
+    close there, so the first ``<!`` or ``<?`` opens a token that runs to
+    the end of input; a comment or CDATA one stops before a final newline,
+    where ``$`` matches. The last block is the ``("", None, None)``
+    sentinel that carries the trailing text."""
+    m = _MARKUP_DECL_RE.search(raw, start)
+    if m is None:
+        return [raw[pos:], "", None, None]
+    tok, rest = raw[m.start():], ""
+    if tok[-1] == "\n" and tok.startswith(("<!--", "<![CDATA[")):
+        tok, rest = tok[:-1], "\n"
+    return [raw[pos:m.start()], tok, None, None, rest, "", None, None]
+
+
+def _split_tokens(raw: str, cut: int) -> list:
+    """``[text, token, slash, name]`` blocks for the whole page, ending in
+    a sentinel block. ``cut`` is one past the last ``>``: a ``<`` after it
+    can never open a tag, so splitting stops there instead of letting the
+    tag arm rescan to the end of input from every such ``<``."""
+    parts = _TOKEN_RE.split(raw[:cut])
+    start = cut
+    if len(parts) > 1 and not parts[-1] and _runs_on(parts[-4]):
+        start -= len(parts[-4])
+        del parts[-4:]
+    parts[-1:] = _tail_parts(raw, start - len(parts[-1]), start)
+    return parts
+
+
+def _scan_tokens(raw: str, pos: int, cut: int, at: list):
+    """The blocks of ``_split_tokens`` from ``pos`` on, scanned one token
+    at a time; ``at[0]`` is the end of the last token yielded. Used after
+    a raw-text resync that the up-front split cannot serve (see
+    ``parse_html``): scanning lazily never looks past the token the
+    caller is on, so each resync costs only what it consumes."""
+    for m in _TOKEN_RE.finditer(raw, pos, cut):
+        tok = m[1]
+        if m.end() == cut and _runs_on(tok):
+            cut = m.start()
+            break
+        at[0] = m.end()
+        yield raw[pos:m.start()], tok, m[2], m[3]
+        pos = m.end()
+    blocks = iter(_tail_parts(raw, pos, max(pos, cut)))
+    yield from zip(blocks, blocks, blocks, blocks)
 
 
 def parse_html(raw: bytes | str) -> Node:
     """Parse HTML bytes (frozen sniff-then-replace decode policy, see
     decode_html_bytes) or a str into a Node tree. Never raises on
-    malformed markup."""
+    malformed markup.
+
+    Runs in time linear in the input: every character is scanned a
+    bounded number of times, whatever the markup (unterminated tags,
+    comments inside raw-text elements, deep nesting)."""
     if isinstance(raw, (bytes, bytearray, memoryview)):
         raw = decode_html_bytes(raw)
     root = Node("#document")
     candidates: list[Node] = []
     root.candidates = candidates
     stack = [root]
+    top = root
     skip_tag = None
     skip_depth = 0
-    a_depth = 0
-    pos = 0
+    # open elements per tag name: a stray end tag is dismissed without a
+    # walk down the stack (which made deep pages quadratic), and
+    # opened["a"] says whether text is link text
+    opened = defaultdict(int)
     n = len(raw)
+    cut = raw.rfind(">") + 1
+    unescape = _html.unescape
 
-    def add_text(text: str) -> None:
-        if "&" in text:
-            text = _html.unescape(text)
-        top = stack[-1]
-        clen = collapsed_len(text)
-        top.tlen += clen
-        if a_depth:
-            top.llen += clen
-        top.children.append(text)
+    parts = _split_tokens(raw, cut)
+    it = iter(parts)
+    source = zip(it, it, it, it)
+    # Position bookkeeping for raw-text resyncs only: parts[done_idx]
+    # starts at raw offset done_pos. ``at`` is None while tokens come from
+    # ``parts``, and the lazy scanner's position cell after that.
+    done_idx = done_pos = 0
+    at = None
+    while source is not None:
+        for text, tok, slash, tag in source:
+            if text and not skip_depth:
+                if "&" in text:
+                    text = unescape(text)
+                clen = len(" ".join(text.split()))
+                if clen:
+                    top.tlen += clen
+                    if opened["a"]:
+                        top.llen += clen
+                top.children.append(text)
+            if tag is None:
+                continue  # comment / cdata / doctype / PI / end sentinel
+            if not tag.islower():
+                tag = tag.lower()
 
-    def pop_to(idx: int) -> None:
-        # fold each popped element's totals into its parent (stats flow up
-        # exactly once, at close time)
-        nonlocal a_depth
-        while len(stack) > idx:
-            child = stack.pop()
-            if child.tag == "a":
-                a_depth -= 1
-            parent = stack[-1]
-            parent.tlen += child.tlen
-            parent.llen += child.llen
-
-    # C-level token scan: one finditer drives the whole loop (the regex
-    # engine skips intervening text internally — measured ~9% faster than
-    # the previous find('<') + anchored-match loop on the fixture corpus,
-    # byte-identical trees). The ONE place `pos` jumps ahead of the
-    # iterator is a raw-text body (script/style): the iterator is
-    # re-created at the jump target, because a still-pending match that
-    # STARTED inside the raw body can span past its close tag (an
-    # unterminated `<!--` inside a script would otherwise swallow the
-    # rest of the document as one comment token — real tags the old loop
-    # parsed). Resyncs are 1-2 per document, so the restart cost is noise.
-    it = _TOKEN_RE.finditer(raw)
-    nxt = it.__next__
-    while True:
-        try:
-            m = nxt()
-        except StopIteration:
-            break
-        start = m.start()
-        if start > pos and skip_depth == 0:
-            add_text(raw[pos:start])
-        pos = m.end()
-        slash, tag, trail = m.group(1, 2, 3)
-        if tag is None:
-            continue  # comment / cdata / doctype / PI
-        if not tag.islower():
-            tag = tag.lower()
-
-        if skip_depth:
-            if tag == skip_tag:
-                if slash:
-                    skip_depth -= 1
-                elif tag not in VOID_TAGS:
-                    skip_depth += 1
-            continue
-
-        if slash:
-            if tag in VOID_TAGS:
+            if skip_depth:
+                if tag == skip_tag:
+                    if slash:
+                        skip_depth -= 1
+                    elif tag not in VOID_TAGS:
+                        skip_depth += 1
                 continue
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i].tag == tag:
-                    pop_to(i)
-                    break
-            continue
 
-        if tag in SKIP_TAGS:
-            if trail:
+            if slash:
+                # close the matching open element and every unclosed one
+                # above it, folding each one's totals into its parent
+                # (stats flow up exactly once, at close time); stray end
+                # tags are ignored
+                if tag == top.tag:  # the common case: closes the top
+                    stack.pop()
+                    child, top = top, stack[-1]
+                    top.tlen += child.tlen
+                    top.llen += child.llen
+                    opened[tag] -= 1
+                    continue
+                if not opened[tag]:
+                    continue
+                for i in range(len(stack) - 2, 0, -1):
+                    if stack[i].tag == tag:
+                        while len(stack) > i:
+                            child = stack.pop()
+                            opened[child.tag] -= 1
+                            top = stack[-1]
+                            top.tlen += child.tlen
+                            top.llen += child.llen
+                        break
                 continue
-            if tag in _RAWTEXT:
-                # raw-text content: jump straight to the close tag and
-                # resync the token iterator past the body (see above)
-                mclose = _RAWTEXT_CLOSE[tag].search(raw, pos)
-                pos = mclose.end() if mclose else n
-                it = _TOKEN_RE.finditer(raw, pos)
-                nxt = it.__next__
-            else:
-                skip_tag = tag
-                skip_depth = 1
-            continue
 
-        top = stack[-1]
-        node = Node(tag, None)
-        top.children.append(node)
-        if tag in CANDIDATE_TAGS:
-            candidates.append(node)
-        if not trail and tag not in VOID_TAGS:
-            stack.append(node)
-            if tag == "a":
-                a_depth += 1
-    if pos < n and skip_depth == 0:
-        add_text(raw[pos:])
-    pop_to(1)  # folds every still-open element's totals up into root
+            # a "/" before the ">" (after optional space) self-closes
+            c = tok[-2]
+            trail = c == "/" or (c.isspace() and tok[:-1].rstrip()[-1] == "/")
+            if tag in SKIP_TAGS:
+                if trail:
+                    continue
+                if tag not in _RAWTEXT:
+                    skip_tag = tag
+                    skip_depth = 1
+                    continue
+                # raw-text content: resume tokenizing after the close tag
+                if at is None:
+                    # k: index of the text block after this token
+                    k = len(parts) - length_hint(it)
+                    pos = (done_pos + sum(map(len, parts[done_idx:k:4]))
+                           + sum(map(len, parts[done_idx + 1:k:4])))
+                else:
+                    pos = at[0]
+                # a close tag ends with ">", so none lies past ``cut``
+                mclose = _RAWTEXT_CLOSE[tag].search(raw, pos, cut)
+                end = mclose.end() if mclose else n
+                if at is None:
+                    # skip the blocks inside the raw body. The close tag
+                    # ends with ">", so a tag or declaration token never
+                    # straddles it; if the end lands in text, trim that
+                    # text and continue from it.
+                    while pos + len(parts[k]) < end:
+                        pos += len(parts[k])
+                        if pos + len(parts[k + 1]) > end:
+                            break  # a comment / CDATA straddles the close
+                        pos += len(parts[k + 1])
+                        k += 4
+                    else:
+                        parts[k] = parts[k][end - pos:]
+                        it.__setstate__(k)  # list iterator: seek to k
+                        done_idx, done_pos = k, end
+                        continue
+                # the split tokenized a comment or CDATA section that
+                # began inside the raw body; scan lazily from the close
+                # tag instead (re-splitting the rest at every such
+                # resync would be quadratic)
+                at = [end]
+                source = _scan_tokens(raw, end, cut, at)
+                break
+
+            node = Node(tag, None)
+            top.children.append(node)
+            if tag in CANDIDATE_TAGS:
+                candidates.append(node)
+            if not trail and tag not in VOID_TAGS:
+                stack.append(node)
+                top = node
+                opened[tag] += 1
+        else:
+            source = None
+    # fold every still-open element's totals up into the root
+    while len(stack) > 1:
+        child = stack.pop()
+        parent = stack[-1]
+        parent.tlen += child.tlen
+        parent.llen += child.llen
     return root
 
 
@@ -421,11 +521,3 @@ def collapse_ws(s: str) -> str:
     """Frozen whitespace normalization: any run of unicode whitespace
     becomes one ASCII space; leading/trailing stripped."""
     return " ".join(s.split())
-
-
-def collapsed_len(s: str) -> int:
-    """len(collapse_ws(s)) without building the string."""
-    parts = s.split()
-    if not parts:
-        return 0
-    return sum(map(len, parts)) + len(parts) - 1

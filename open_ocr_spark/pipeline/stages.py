@@ -45,12 +45,13 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
     """Arrow-batch kernel: one Python invocation per batch (≈4096 rows),
     zero per-row Spark overhead. Imports stay inside the function so the
     closure ships cleanly via --py-files."""
+    import pyarrow.compute as pc
+
     from open_ocr_spark.kernels.dispatch import extract_document
 
     for batch in batches:
         cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
         n = batch.num_rows
-        urls = cols["url"].to_pylist()
         htmls = cols["html"].to_pylist()
         langs = cols["lang"].to_pylist() if "lang" in cols else [None] * n
         engines = cols["engine"].to_pylist() if "engine" in cols else [None] * n
@@ -76,11 +77,9 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
         texts: list[str] = []
         statuses: list[str] = []
         errors: list[str] = []
-        nbytes: list[int] = []
         for i in range(n):
-            html = htmls[i]
             text, status, error = extract_document(
-                html,
+                htmls[i],
                 lang=langs[i],
                 engine=engines[i],
                 engine_args=dict(eargs[i]) if eargs[i] else None,
@@ -90,14 +89,15 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
             texts.append(text)
             statuses.append(status)
             errors.append(error)
-            nbytes.append(len(html) if html is not None else 0)
 
+        # url passes through zero-copy; a null payload counts 0 bytes
+        nbytes = pc.binary_length(cols["html"]).cast(pa.int64()).fill_null(0)
         arrays = [
-            pa.array(urls, pa.string()),
+            cols["url"],
             pa.array(texts, pa.string()),
             pa.array(statuses, pa.string()),
             pa.array(errors, pa.string()),
-            pa.array(nbytes, pa.int64()),
+            nbytes,
         ]
         names = ["url", "extracted_text", "status", "error", "n_bytes"]
         for name in batch.schema.names:

@@ -831,3 +831,37 @@ def test_charset_utf16_label_normalizes_to_utf8():
     payload = "<html><body><p>ok</p></body></html>".encode("utf-8")
     text, status, _ = _extract_with_charset("UTF-16", payload)
     assert status == "ok" and text == "ok"
+
+
+# --- batch shell (pipeline/stages._extract_batches) --------------------------
+
+
+def test_extract_batches_shell_columns():
+    """url passes through zero-copy, n_bytes is the payload's byte length
+    (0 for a null payload), and unknown columns pass through untouched."""
+    import pyarrow as pa
+
+    from open_ocr_spark.pipeline.stages import _extract_batches
+
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array(["u1", None, "u3", "u4"], pa.string()),
+            pa.array([b"<p>hi</p>", None, b"", "<p>é</p>".encode()],
+                     pa.binary()),
+            pa.array(["eng", None, None, None], pa.string()),
+            pa.array([1, 2, 3, 4], pa.int64()),
+        ],
+        names=["url", "html", "lang", "doc_id"],
+    )
+    (out,) = list(_extract_batches(iter([batch])))
+    assert out.schema.names == [
+        "url", "extracted_text", "status", "error", "n_bytes", "doc_id",
+    ]
+    assert out.column(0).buffers() == batch.column(0).buffers()
+    assert out.column("n_bytes").type == pa.int64()
+    assert out.column("n_bytes").to_pylist() == [9, 0, 0, 9]
+    assert out.column("status").to_pylist() == [
+        "ok", "error:empty", "error:empty", "ok",
+    ]
+    assert out.column("extracted_text").to_pylist()[3] == "é"
+    assert out.column("doc_id").to_pylist() == [1, 2, 3, 4]

@@ -239,3 +239,86 @@ def test_dispatch_total_on_tar_like(payload):
     raw[257:262] = b"ustar"
     text, status, _ = extract_document(bytes(raw) + payload)
     assert status == "ok" or status.startswith("error:")
+
+
+# --- complexity gate: linear time, bounded stack -----------------------------
+# Each adversarial family runs through the dispatch at size n and 4n, best
+# of 3; a linear kernel takes about 4x as long, a quadratic one 16x. The
+# bound of 6 leaves room for a noisy host, which also gets up to three
+# attempts (a quadratic kernel misses the bound on every one). The cyclic
+# GC is paused while timing: its collections land at arbitrary points and
+# move single timings by as much as the ratio under test. A page that
+# parsed quadratically would take minutes at 4n, so each run is also
+# capped in absolute time.
+
+import gc  # noqa: E402
+import time  # noqa: E402
+
+import pytest  # noqa: E402
+
+_FAMILIES = {
+    # every "<" has no later ">": the tag arm used to rescan to the end
+    # (48 KB at n)
+    "unterminated_tags": (lambda k: b"<a " * k, 16000),
+    # 5000 elements deep at n, never closed
+    "deep_nesting": (lambda k: b"<font><b>" * k + b"deep text", 2500),
+    # a comment opened in a raw-text body and left open past its close tag
+    "rawtext_comment": (lambda k: b"<script><!--</script><p>x</p>" * k, 2500),
+    # close tags of a raw-text element that never reach their ">"
+    "rawtext_unclosed": (lambda k: b"<script>" + b"</script " * k, 20000),
+    # end tags that match nothing on a deep stack of open elements
+    "stray_end_tags": (lambda k: b"<b>" * k + b"</i>" * k, 2500),
+}
+
+
+def _best_of_3(payload):
+    best = float("inf")
+    for _ in range(3):
+        t = time.perf_counter()
+        _, status, err = extract_document(payload)
+        elapsed = time.perf_counter() - t
+        assert status == "ok", err
+        assert elapsed < 5.0, f"{len(payload)} bytes took {elapsed:.1f}s"
+        best = min(best, elapsed)
+    return best
+
+
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_html_kernel_scales_linearly(family):
+    make, k = _FAMILIES[family]
+    gc.collect()
+    gc.disable()
+    try:
+        for _ in range(3):
+            small = _best_of_3(make(k))
+            assert small < 1.0, f"{family}: {small:.2f}s at n"
+            big = _best_of_3(make(4 * k))
+            if big / small <= 6:
+                break
+    finally:
+        gc.enable()
+    assert big / small <= 6, f"{family}: {small:.4f}s -> {big:.4f}s"
+
+
+def test_deep_nesting_extracts_ok():
+    text, status, _ = extract_document(b"<font><b>" * 5000 + b"deep text")
+    assert (text, status) == ("deep text", "ok")
+
+
+@given(st.binary(max_size=700))
+@settings(max_examples=200, deadline=None)
+def test_markup_fast_route_skips_no_format(tail):
+    """The dispatch sends a payload opening with "<" straight to the HTML
+    branch unless it carries the tar magic at offset 257: no other sniff
+    of the format ladder may accept such a payload."""
+    from open_ocr_spark.kernels import dispatch as d
+
+    payload = b"<" + tail
+    if payload[257:262] == b"ustar":
+        return
+    sniffs = (d.is_pdf, d._mbox_sniff, d._eml_sniff, d._ipynb_sniff,
+              d._latex_sniff, d._vtt_sniff, d._srt_sniff, d._is_image_payload)
+    assert not any(sniff(payload) for sniff in sniffs)
+    magics = (b"\x1f\x8b", b"{\\rtf", b"\xd0\xcf\x11\xe0", b"PK\x03\x04",
+              b"From ", b"%!PS")
+    assert not payload.startswith(magics)

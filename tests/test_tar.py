@@ -278,3 +278,11 @@ def test_gnu_long_name_records():
         info.mtime = 0
         tf.addfile(info, io.BytesIO(b"gnu"))
     assert split_tar(buf.getvalue()) == [(long_name, b"gnu")]
+
+
+def test_tar_whose_first_member_name_opens_with_lt_routes_as_tar():
+    # the header starts with the member name, so the payload's first byte
+    # is "<": the dispatch's markup fast route must still see the tar
+    raw = build_tar([("<page>.html", b"<p>Angle member.</p>")])
+    assert raw[:1] == b"<"
+    assert extract_document(raw) == ("Angle member.", "ok", "")
