@@ -29,8 +29,6 @@ from __future__ import annotations
 
 import struct
 
-_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
-
 
 def _iter_boxes(data: bytes, start: int, end: int):
     """Yield (type, body_start, body_end) for each box in [start, end)."""

@@ -38,10 +38,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, payload binary, media_type string, meta map<string,string>"
-)
-
 FEATURE_SCHEMA = (
     "media_id long, media_type string, n_bytes long, sha1 string, "
     "width int, height int, n_frames int, "

@@ -16,8 +16,6 @@ open_ocr_spark.streaming.running_user_counts_stateful.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window

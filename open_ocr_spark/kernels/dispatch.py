@@ -1,13 +1,24 @@
 """Per-document extraction dispatch: engine factory + preprocessor chain +
 error-as-value, as one pure function the Arrow batch kernel maps over.
 
+Format routing is one ordered table, ``_FORMATS``, of ``(format, sniff,
+extract)`` rows: the first row whose sniff accepts the payload extracts
+it, and a ``ValueError`` from its extractor becomes the value
+``error:<format>-unsupported``. Row order is semantics, because sniffs
+overlap (the final ``html`` row accepts everything, the ``zip`` row every
+zip the Office rows left). Row 1 is the markup fast route: only the tar
+sniff could also accept a payload opening with ``<``, so a page costs one
+cheap check. Format modules import on first use.
+
 Reference parity:
 - Engine factory/dispatch (/root/reference/ocr_engine.go:22-30, default-mock
   on unknown at :58-60) → resolve_engine + the engine branch below.
 - Chain router (/root/reference/ocr_request.go:21-31): stages execute in
   REVERSE list order (pop-from-end); the terminal hop is always the engine
-  ("decode-ocr", rabbit_config.go:25).
-- Identity preprocessor (/root/reference/preprocessor.go:11-16): no-op.
+  ("decode-ocr", rabbit_config.go:25). Here the chain only validates
+  stage names: the engine routes by magic bytes with or without
+  convert-pdf, identity is a no-op (preprocessor.go:11-16), and SWT is
+  the HTML extractors' ``aggressive`` flag.
 - Error-as-value (/root/reference/ocr_rpc_worker.go:163-190): a failing
   document NEVER fails the job; the reference embeds "Error ..." in the
   text and still replies — we do better per SURVEY §2.A17: clean
@@ -26,6 +37,8 @@ from __future__ import annotations
 
 import json
 import re
+from importlib import import_module
+from typing import NamedTuple
 
 from open_ocr_spark.kernels.html_extract import extract_main_text
 from open_ocr_spark.kernels.mock import MOCK_ENGINE_RESPONSE
@@ -34,16 +47,14 @@ from open_ocr_spark.kernels.options import (
     ENGINE_MOCK,
     ENGINE_TESSERACT,
     KNOWN_PREPROCESSORS,
-    PREPROCESSOR_CONVERT_PDF,
-    PREPROCESSOR_IDENTITY,
-    PREPROCESSOR_STROKE_WIDTH,
     SUPPORTED_LANGS,
+    EngineArgs,
     execution_order,
     parse_engine_args,
     resolve_engine,
     swt_aggressive,
 )
-from open_ocr_spark.kernels.pdf_text import extract_pdf_text, is_pdf
+from open_ocr_spark.kernels.pdf_text import is_pdf
 
 STATUS_OK = "ok"
 
@@ -52,11 +63,6 @@ STATUS_OK = "ok"
 # an error value instead of stalling its whole task. 20 MB covers >99.99%
 # of real crawl pages.
 MAX_DOC_BYTES = 20 * 1024 * 1024
-
-# Default chain when none is given: PDF payloads are still handled, because
-# the engine itself routes by magic bytes (the reference's tesseract would
-# fail on a PDF; our flagship pipeline always detects).
-_DEFAULT_CHAIN = (PREPROCESSOR_CONVERT_PDF, PREPROCESSOR_STROKE_WIDTH)
 
 
 _PPM_HEADER_RE = re.compile(rb"P6\s+\d+\s+\d+\s+255\s")
@@ -82,94 +88,99 @@ def _is_image_payload(payload: bytes) -> bool:
     return bool(_PPM_HEADER_RE.match(payload[:40]))
 
 
-def _members_text(
-    members, lang, engine, engine_args, preprocessors, preprocessor_args,
-    depth, kind,
-):
-    """Shared archive-member loop (tar and generic zip): every member
-    routes back through extract_document; a failing member fails the
-    archive as a value naming the member. Members render plain — the
-    outer structured switch (if any) wraps the joined text once."""
-    member_args = dict(engine_args or {})
-    cv = dict(member_args.get("config_vars") or {})
-    cv.pop("tessedit_create_hocr", None)
-    if cv:
-        member_args["config_vars"] = cv
-    else:
-        member_args.pop("config_vars", None)
-    texts = []
-    for name, data in members:
-        t, s, e = extract_document(
-            data, lang, engine, member_args or None,
-            preprocessors, preprocessor_args,
-            _depth=depth + 1,
-        )
-        if s != STATUS_OK:
-            return None, f"error:{kind}-member", f"{name}: {e or s}"
-        texts.append(t)
-    return "\n".join(texts), STATUS_OK, ""
+class _Doc(NamedTuple):
+    """An extractor's view of the call besides the payload; ``call`` is
+    (lang, engine, engine_args, preprocessors, preprocessor_args)."""
+
+    args: EngineArgs
+    aggressive: bool
+    depth: int
+    call: tuple
 
 
-def _mbox_sniff(payload: bytes) -> bool:
-    from open_ocr_spark.kernels.eml_text import is_mbox
-
-    return is_mbox(payload)
+class _MemberError(Exception):
+    """An archive member failed to extract: ``error:<format>-member``."""
 
 
-def _eml_sniff(payload: bytes) -> bool:
-    """Lazy wrapper so the eml module only imports when a payload could
-    plausibly be mail (first byte is a printable header-name char)."""
-    if not payload or not (33 <= payload[0] <= 126) or payload[0] == ord("<"):
-        return False
-    from open_ocr_spark.kernels.eml_text import is_eml
+def _lazy(module: str, name: str):
+    """``kernels.<module>.<name>``, imported on the first call and then
+    cached, so a format module loads only once a payload needs it."""
+    fn = None
 
-    return is_eml(payload)
+    def call(*args, **kwargs):
+        nonlocal fn
+        if fn is None:
+            fn = getattr(import_module(f"open_ocr_spark.kernels.{module}"),
+                         name)
+        return fn(*args, **kwargs)
 
-
-def _ipynb_sniff(payload: bytes) -> bool:
-    """Lazy wrapper: only payloads whose first byte can open a JSON
-    object (optionally after whitespace) pay for the notebook sniff's
-    parse; ordinary pages start with '<' and skip it entirely."""
-    if payload[:1] not in (b"{", b" ", b"\t", b"\r", b"\n"):
-        return False
-    from open_ocr_spark.kernels.ipynb_text import is_ipynb
-
-    return is_ipynb(payload)
+    return call
 
 
-def _latex_sniff(payload: bytes) -> bool:
-    r"""Lazy wrapper: only payloads whose first non-blank byte is a TeX
-    control or comment char (\ or %) pay for the preamble scan."""
-    if payload[:64].lstrip()[:1] not in (b"\\", b"%"):
-        return False
-    from open_ocr_spark.kernels.latex_text import is_latex
-
-    return is_latex(payload)
+def _gated(gate, module: str, name: str):
+    """A sniff row: the cheap byte ``gate`` first, and only payloads that
+    pass it pay for importing and running the format's own sniff."""
+    sniff = _lazy(module, name)
+    return lambda payload: gate(payload) and sniff(payload)
 
 
-def _vtt_sniff(payload: bytes) -> bool:
-    """Lazy wrapper: only payloads opening with 'W' (the WEBVTT magic's
-    first byte, never HTML's '<') pay for the header check. The spec
-    permits a UTF-8 BOM before the magic (and Windows tools write it),
-    so the byte gate looks past one."""
-    head = payload[3:4] if payload[:3] == b"\xef\xbb\xbf" else payload[:1]
-    if head != b"W":
-        return False
-    from open_ocr_spark.kernels.subtitle_text import is_webvtt
-
-    return is_webvtt(payload)
+def _text_of(module: str, name: str):
+    """An extract row for a format module's ``extract_*`` function."""
+    extract = _lazy(module, name)
+    return lambda payload, doc: extract(payload)
 
 
-def _srt_sniff(payload: bytes) -> bool:
-    """Lazy wrapper: only payloads whose first non-blank byte (after an
-    optional UTF-8 BOM) is a digit (a SubRip cue index) pay for the
-    index+timestamp pair scan."""
-    head = payload[3:19] if payload[:3] == b"\xef\xbb\xbf" else payload[:16]
-    if not head.lstrip()[:1].isdigit():
-        return False
-    from open_ocr_spark.kernels.subtitle_text import is_srt
+def _mail_text(name: str):
+    """Mail extract rows: attachments route back through extract_document,
+    so the extractor carries the nesting depth."""
+    extract = _lazy("eml_text", name)
+    return lambda payload, doc: extract(payload, _dispatch_depth=doc.depth)
 
-    return is_srt(payload)
+
+def _members_text(split, check=None):
+    """The tar and zip extract rows: every member routes back through
+    extract_document, and the archive text is the member texts in order.
+    Members render plain — the outer structured switch (if any) wraps the
+    joined text once. One nesting level only: an archive inside an
+    archive (or a mail attachment) is an error value."""
+
+    def extract(payload: bytes, doc: _Doc) -> str:
+        if check is not None:
+            check(payload)
+        if doc.depth >= 1:
+            raise ValueError("nested archive (depth > 1)")
+        members = split(payload)
+        if not members:
+            raise ValueError("archive has no file members")
+        lang, engine, engine_args, preprocessors, preprocessor_args = \
+            doc.call
+        member_args = dict(engine_args or {})
+        cv = dict(member_args.get("config_vars") or {})
+        cv.pop("tessedit_create_hocr", None)
+        if cv:
+            member_args["config_vars"] = cv
+        else:
+            member_args.pop("config_vars", None)
+        texts = []
+        for name, data in members:
+            t, s, e = extract_document(
+                data, lang, engine, member_args or None, preprocessors,
+                preprocessor_args, _depth=doc.depth + 1,
+            )
+            if s != STATUS_OK:
+                raise _MemberError(f"{name}: {e or s}")
+            texts.append(t)
+        return "\n".join(texts)
+
+    return extract
+
+
+_is_tar = _lazy("archive", "is_tar")
+
+
+def _check_tar(payload: bytes) -> None:
+    if not _is_tar(payload):
+        raise ValueError("ustar magic with invalid header checksum")
 
 
 def _spans_json(text: str) -> str:
@@ -197,16 +208,81 @@ def _apply_charset(payload: bytes, args) -> bytes | str:
     return payload.decode(codec, errors="replace")
 
 
-def _markup_text(payload: bytes, args, aggressive: bool) -> str:
+_html_to_markdown = _lazy("html_markdown", "html_to_markdown")
+
+
+def _markup_text(payload: bytes, doc: _Doc) -> str:
     """The HTML branch: main text, or in the "md" output format
     (options.py markdown_output) structure-preserving markdown."""
-    if args.markdown_output:
-        from open_ocr_spark.kernels.html_markdown import html_to_markdown
+    text = _apply_charset(payload, doc.args)
+    if doc.args.markdown_output:
+        return _html_to_markdown(text, aggressive=doc.aggressive)
+    return extract_main_text(text, aggressive=doc.aggressive)
 
-        return html_to_markdown(
-            _apply_charset(payload, args), aggressive=aggressive
-        )
-    return extract_main_text(_apply_charset(payload, args), aggressive=aggressive)
+
+def _is_zip(payload: bytes) -> bool:
+    return payload[:4] == b"PK\x03\x04"
+
+
+_BOM = b"\xef\xbb\xbf"
+
+
+def _cue_index_first(p: bytes) -> bool:
+    # a SubRip cue index: a digit first, after an optional BOM and blanks
+    return (p[3:19] if p[:3] == _BOM else p[:16]).lstrip()[:1].isdigit()
+
+
+# (format, sniff, extract); row order is semantics (module docstring)
+_FORMATS = (
+    # markup fast route: pages skip every other sniff
+    ("html", lambda p: p[:1] == b"<" and p[257:262] != b"ustar",
+     _markup_text),
+    ("pdf", is_pdf, _text_of("pdf_text", "extract_pdf_text")),
+    ("rtf", lambda p: p[:5] == b"{\\rtf",
+     _text_of("rtf_text", "extract_rtf_text")),
+    # legacy Office binaries: the CFB directory picks Word/PowerPoint/Excel
+    ("doc", lambda p: p[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1",
+     _text_of("doc_text", "extract_cfb_text")),
+    # OOXML, ODF and EPUB by their parts; any other zip is an archive
+    ("docx", _gated(_is_zip, "docx_text", "is_docx"),
+     _text_of("docx_text", "extract_docx_text")),
+    ("odt", _gated(_is_zip, "docx_text", "is_odt"),
+     _text_of("docx_text", "extract_odt_text")),
+    ("pptx", _gated(_is_zip, "docx_text", "is_pptx"),
+     _text_of("docx_text", "extract_pptx_text")),
+    ("xlsx", _gated(_is_zip, "docx_text", "is_xlsx"),
+     _text_of("docx_text", "extract_xlsx_text")),
+    ("epub", _gated(_is_zip, "docx_text", "is_epub"),
+     _text_of("docx_text", "extract_epub_text")),
+    ("zip", _is_zip, _members_text(_lazy("archive", "split_zip"))),
+    ("tar", lambda p: len(p) >= 512 and p[257:262] == b"ustar",
+     _members_text(_lazy("archive", "split_tar"), check=_check_tar)),
+    # the envelope line "From <addr> <date>" is no RFC 5322 header
+    ("mbox", _gated(lambda p: p[:5] == b"From ", "eml_text", "is_mbox"),
+     _mail_text("extract_mbox_text")),
+    # mail opens with a printable header-name byte, never "<"
+    ("eml", _gated(lambda p: p and 33 <= p[0] <= 126 and p[0] != ord("<"),
+                   "eml_text", "is_eml"),
+     _mail_text("extract_eml_text")),
+    # a notebook is a JSON object, optionally after whitespace
+    ("ipynb", _gated(lambda p: p[:1] in (b"{", b" ", b"\t", b"\r", b"\n"),
+                     "ipynb_text", "is_ipynb"),
+     _text_of("ipynb_text", "extract_ipynb_text")),
+    # TeX source opens with a control word or a comment
+    ("latex", _gated(lambda p: p[:64].lstrip()[:1] in (b"\\", b"%"),
+                     "latex_text", "is_latex"),
+     _text_of("latex_text", "extract_latex_text")),
+    ("ps", lambda p: p[:4] == b"%!PS", _text_of("ps_text", "extract_ps_text")),
+    # WEBVTT magic, after the UTF-8 BOM the spec permits
+    ("vtt", _gated(lambda p: (p[3:4] if p[:3] == _BOM else p[:1]) == b"W",
+                   "subtitle_text", "is_webvtt"),
+     _text_of("subtitle_text", "extract_webvtt_text")),
+    ("srt", _gated(_cue_index_first, "subtitle_text", "is_srt"),
+     _text_of("subtitle_text", "extract_srt_text")),
+    # raster payloads: unrecognizable pixels are a low-confidence error
+    ("ocr", _is_image_payload, _text_of("glyph_ocr", "ocr_image")),
+    ("html", lambda p: True, _markup_text),
+)
 
 
 def extract_document(
@@ -265,9 +341,7 @@ def extract_document(
                 f"payload {len(html)} bytes exceeds {MAX_DOC_BYTES}",
             )
 
-        chain = execution_order(list(preprocessors)) if preprocessors \
-            else list(_DEFAULT_CHAIN)
-
+        chain = execution_order(list(preprocessors)) if preprocessors else []
         unknown = [s for s in chain if s not in KNOWN_PREPROCESSORS]
         if unknown:
             return "", "error:preprocessor", f"unknown preprocessor: {unknown[0]}"
@@ -294,240 +368,20 @@ def extract_document(
                     )
                 return "", "error:gzip-unsupported", str(exc)
 
-        text: str | None = None
-
-        for stage in chain:
-            if stage == PREPROCESSOR_IDENTITY:
-                continue  # preprocessor.go:11-16
-            if stage == PREPROCESSOR_CONVERT_PDF:
-                if is_pdf(payload):
-                    try:
-                        text = extract_pdf_text(payload)
-                    except ValueError as exc:
-                        return "", "error:pdf-unsupported", str(exc)
-            elif stage == PREPROCESSOR_STROKE_WIDTH:
-                pass  # folded into the engine call's `aggressive` flag
-
-        if text is None:
-            if payload[:1] == b"<" and payload[257:262] != b"ustar":
-                # markup fast route: of the sniffs below only the tar
-                # header (magic at offset 257) can match a payload that
-                # opens with "<", so pages skip the rest of the ladder
-                text = _markup_text(payload, args, aggressive)
-            elif is_pdf(payload):
-                # no convert-pdf stage in the chain but payload is a PDF:
-                # the engine itself routes by magic bytes
-                try:
-                    text = extract_pdf_text(payload)
-                except ValueError as exc:
-                    return "", "error:pdf-unsupported", str(exc)
-            elif payload[:5] == b"{\\rtf":
-                # RTF routes by magic like PDF (r4, kernels/rtf_text.py);
-                # without this branch the HTML tokenizer would eat the
-                # control words as text soup
-                from open_ocr_spark.kernels.rtf_text import extract_rtf_text
-
-                try:
-                    text = extract_rtf_text(payload)
-                except ValueError as exc:
-                    return "", "error:rtf-unsupported", str(exc)
-            elif payload[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1":
-                # Legacy Office binaries: CFB magic, then the container
-                # directory picks Word/PowerPoint/Excel (r5,
-                # kernels/doc_text.py extract_cfb_text)
-                from open_ocr_spark.kernels.doc_text import (
-                    extract_cfb_text,
-                )
-
-                try:
-                    text = extract_cfb_text(payload)
-                except ValueError as exc:
-                    return "", "error:doc-unsupported", str(exc)
-            elif payload[:4] == b"PK\x03\x04":
-                # Office containers: same magic-byte routing as PDF
-                # (r4) — OOXML (.docx) and ODF (.odt). ZIPs that are
-                # neither stay error-as-value rather than being fed to
-                # the HTML tokenizer as binary soup.
-                from open_ocr_spark.kernels.docx_text import (
-                    extract_docx_text,
-                    extract_epub_text,
-                    extract_odt_text,
-                    extract_pptx_text,
-                    extract_xlsx_text,
-                    is_docx,
-                    is_epub,
-                    is_odt,
-                    is_pptx,
-                    is_xlsx,
-                )
-
-                if is_docx(payload):
-                    try:
-                        text = extract_docx_text(payload)
-                    except ValueError as exc:
-                        return "", "error:docx-unsupported", str(exc)
-                elif is_odt(payload):
-                    try:
-                        text = extract_odt_text(payload)
-                    except ValueError as exc:
-                        return "", "error:odt-unsupported", str(exc)
-                elif is_pptx(payload):
-                    try:
-                        text = extract_pptx_text(payload)
-                    except ValueError as exc:
-                        return "", "error:pptx-unsupported", str(exc)
-                elif is_xlsx(payload):
-                    try:
-                        text = extract_xlsx_text(payload)
-                    except ValueError as exc:
-                        return "", "error:xlsx-unsupported", str(exc)
-                elif is_epub(payload):
-                    try:
-                        text = extract_epub_text(payload)
-                    except ValueError as exc:
-                        return "", "error:epub-unsupported", str(exc)
-                else:
-                    # not an Office/EPUB container: a generic zip
-                    # archive — members route through the dispatch like
-                    # tar members (r5, kernels/archive.py)
-                    from open_ocr_spark.kernels.archive import split_zip
-
-                    if _depth >= 1:
-                        return ("", "error:zip-unsupported",
-                                "nested archive (depth > 1)")
-                    try:
-                        members = split_zip(payload)
-                    except ValueError as exc:
-                        return "", "error:zip-unsupported", str(exc)
-                    if not members:
-                        return ("", "error:zip-unsupported",
-                                "archive has no file members")
-                    text, s, e = _members_text(
-                        members, lang, engine, engine_args, preprocessors,
-                        preprocessor_args, _depth, "zip",
-                    )
-                    if text is None:
-                        return "", s, e
-            elif len(payload) >= 512 and payload[257:262] == b"ustar":
-                # tar archive (r5, kernels/archive.py): each regular-file
-                # member routes back through this dispatch; the archive
-                # text is the member texts in order. One recursion level
-                # only — an archive inside an archive is an error value.
-                from open_ocr_spark.kernels.archive import is_tar, split_tar
-
-                if not is_tar(payload):
-                    return ("", "error:tar-unsupported",
-                            "ustar magic with invalid header checksum")
-                if _depth >= 1:
-                    return ("", "error:tar-unsupported",
-                            "nested archive (depth > 1)")
-                try:
-                    members = split_tar(payload)
-                except ValueError as exc:
-                    return "", "error:tar-unsupported", str(exc)
-                if not members:
-                    return "", "error:tar-unsupported", "archive has no file members"
-                text, s, e = _members_text(
-                    members, lang, engine, engine_args, preprocessors,
-                    preprocessor_args, _depth, "tar",
-                )
-                if text is None:
-                    return "", s, e
-            elif payload[:5] == b"From " and _mbox_sniff(payload):
-                # Unix mbox mail archive (r5, kernels/eml_text.py): the
-                # envelope line "From <addr> <date>" can't be an RFC
-                # 5322 header (space, not colon) nor HTML
-                from open_ocr_spark.kernels.eml_text import (
-                    extract_mbox_text,
-                )
-
-                try:
-                    text = extract_mbox_text(payload, _dispatch_depth=_depth)
-                except ValueError as exc:
-                    return "", "error:mbox-unsupported", str(exc)
-            elif _eml_sniff(payload):
-                # RFC 5322 / MIME e-mail (r5, kernels/eml_text.py): a
-                # header-block structural sniff that HTML can never
-                # satisfy routes mail payloads away from the HTML
-                # tokenizer
-                from open_ocr_spark.kernels.eml_text import (
-                    extract_eml_text,
-                )
-
-                try:
-                    text = extract_eml_text(payload, _dispatch_depth=_depth)
-                except ValueError as exc:
-                    return "", "error:eml-unsupported", str(exc)
-            elif _ipynb_sniff(payload):
-                # Jupyter notebook (r5, kernels/ipynb_text.py): JSON
-                # payload with the nbformat/cells shape; cell sources +
-                # textual outputs render in document order
-                from open_ocr_spark.kernels.ipynb_text import (
-                    extract_ipynb_text,
-                )
-
-                try:
-                    text = extract_ipynb_text(payload)
-                except ValueError as exc:
-                    return "", "error:ipynb-unsupported", str(exc)
-            elif _latex_sniff(payload):
-                # LaTeX source (r5, kernels/latex_text.py): the
-                # \documentclass preamble routes .tex payloads away from
-                # the HTML tokenizer; markup resolves to prose like the
-                # HTML branch's boilerplate strip
-                from open_ocr_spark.kernels.latex_text import (
-                    extract_latex_text,
-                )
-
-                try:
-                    text = extract_latex_text(payload)
-                except ValueError as exc:
-                    return "", "error:latex-unsupported", str(exc)
-            elif payload[:4] == b"%!PS":
-                # PostScript routes by DSC magic like PDF (r5,
-                # kernels/ps_text.py): scan-based text-show recovery,
-                # the pre-PDF sibling of the convert-pdf branch
-                from open_ocr_spark.kernels.ps_text import extract_ps_text
-
-                try:
-                    text = extract_ps_text(payload)
-                except ValueError as exc:
-                    return "", "error:ps-unsupported", str(exc)
-            elif _vtt_sniff(payload):
-                # WebVTT subtitles (r5, kernels/subtitle_text.py): cue
-                # text in cue order, timing/markup machinery dropped
-                from open_ocr_spark.kernels.subtitle_text import (
-                    extract_webvtt_text,
-                )
-
-                try:
-                    text = extract_webvtt_text(payload)
-                except ValueError as exc:
-                    return "", "error:vtt-unsupported", str(exc)
-            elif _srt_sniff(payload):
-                # SubRip subtitles (r5): index + timestamp pair sniff,
-                # same cue-text contract as WebVTT
-                from open_ocr_spark.kernels.subtitle_text import (
-                    extract_srt_text,
-                )
-
-                try:
-                    text = extract_srt_text(payload)
-                except ValueError as exc:
-                    return "", "error:srt-unsupported", str(exc)
-            elif _is_image_payload(payload):
-                # raster payloads route to the pixel-domain OCR branch —
-                # the reference's literal image->text contract
-                # (kernels/glyph_ocr.py). Unrecognizable pixels are a
-                # declared low-confidence error value, not silence.
-                from open_ocr_spark.kernels.glyph_ocr import ocr_image
-
-                try:
-                    text = ocr_image(payload)
-                except ValueError as exc:
-                    return "", "error:ocr-unsupported", str(exc)
-            else:
-                text = _markup_text(payload, args, aggressive)
+        for fmt, sniff, extract in _FORMATS:
+            if sniff(payload):
+                break
+        call = (lang, engine, engine_args, preprocessors, preprocessor_args)
+        try:
+            text = extract(payload, _Doc(args, aggressive, _depth, call))
+        except ValueError as exc:
+            if fmt == "html":
+                # the HTML extractors never raise ValueError on purpose; a
+                # codec that cannot decode with errors=replace is internal
+                raise
+            return "", f"error:{fmt}-unsupported", str(exc)
+        except _MemberError as exc:
+            return "", f"error:{fmt}-member", str(exc)
 
         if args.structured_output:
             return _spans_json(text), STATUS_OK, ""

@@ -68,16 +68,6 @@ def _attr(node: Node, name: str) -> str:
     return ""
 
 
-def _wrap(inner: str, marker: str) -> str:
-    """Emphasis with boundary whitespace moved outside the markers."""
-    core = inner.strip()
-    if not core:
-        return inner
-    lead = inner[: len(inner) - len(inner.lstrip())]
-    trail = inner[len(inner.rstrip()):]
-    return f"{lead}{marker}{core}{marker}{trail}"
-
-
 def _code_span(node: Node) -> str:
     content = collapse_ws("".join(node.iter_text()))
     if not content:
@@ -87,13 +77,9 @@ def _code_span(node: Node) -> str:
     return f"`{content}`"
 
 
-def _inline(node: Node) -> str:
-    return "".join(_inline_one(child) for child in node.children)
-
-
-def _inline_one(child) -> str:
-    if type(child) is str:
-        return _esc(child)
+def _leaf(child: Node) -> str | None:
+    """Inline elements rendered without their children's markdown
+    (line break, image, code span); None for every other element."""
     tag = child.tag
     if tag == "br":
         return " "
@@ -104,16 +90,90 @@ def _inline_one(child) -> str:
         return f"![{_esc(collapse_ws(_attr(child, 'alt')))}]({src})"
     if tag == "code":
         return _code_span(child)
-    inner = _inline(child)
-    if tag == "a":
+    return None
+
+
+class _Run:
+    """Inline markdown under construction: whether whitespace leads it,
+    its core (nested fragment lists whose joined text neither starts nor
+    ends with whitespace), and whether whitespace trails it. Wrapping the
+    core and moving or dropping the boundary whitespace cost O(1) at any
+    depth, and the text is joined once. Whitespace inside comes out as one
+    space: every caller collapses whitespace anyway."""
+
+    __slots__ = ("lead", "core", "trail")
+
+    def __init__(self) -> None:
+        self.lead, self.core, self.trail = False, [], False
+
+    def add(self, core, lead: bool, trail: bool) -> None:
+        """Append a piece; an empty ``core`` is blank (whitespace when
+        ``lead``)."""
+        if not self.core:
+            self.lead |= lead
+        elif not core:
+            self.trail |= lead
+        elif self.trail or lead:
+            self.core.append(" ")
+        if core:
+            self.core.append(core)
+            self.trail = trail
+
+    def add_text(self, text: str) -> None:
+        self.add(text.strip(), text[:1].isspace(), text[-1:].isspace())
+
+    def text(self) -> str:
+        out, stack = [" "] if self.lead else [], [self.core]
+        while stack:
+            frag = stack.pop()
+            if type(frag) is list:
+                stack.extend(reversed(frag))
+            else:
+                out.append(frag)
+        if self.trail:
+            out.append(" ")
+        return "".join(out)
+
+
+def _close(child: Node, run: _Run) -> _Run:
+    """A link brackets its stripped text; emphasis markers hug the text,
+    with boundary whitespace moved outside the pair."""
+    if run.core and child.tag == "a":
         href = _attr(child, "href")
-        if href and inner.strip():
-            return f"[{inner.strip()}]({href})"
-        return inner
-    marker = _EMPHASIS.get(tag)
-    if marker:
-        return _wrap(inner, marker)
-    return inner
+        if href:
+            run.core = ["[", run.core, f"]({href})"]
+            run.lead = run.trail = False
+    elif run.core and child.tag in _EMPHASIS:
+        marker = _EMPHASIS[child.tag]
+        run.core = [marker, run.core, marker]
+    return run
+
+
+def _inline(children) -> str:
+    """The inline markdown of a run of sibling nodes. Iterative and
+    linear: a stack of (element, child iterator, run) frames, one per open
+    element, so deep nesting costs neither interpreter stack nor repeated
+    copies."""
+    top = _Run()
+    stack = [(None, iter(children), top)]
+    while stack:
+        element, nodes, run = stack[-1]
+        for child in nodes:
+            if type(child) is str:
+                run.add_text(_esc(child))
+                continue
+            leaf = _leaf(child)
+            if leaf is not None:
+                run.add_text(leaf)
+                continue
+            stack.append((child, iter(child.children), _Run()))
+            break
+        else:
+            stack.pop()
+            if stack:
+                closed = _close(element, run)
+                stack[-1][2].add(closed.core, closed.lead, closed.trail)
+    return top.text()
 
 
 def _list_lines(node: Node, depth: int) -> list[str]:
@@ -129,16 +189,16 @@ def _list_lines(node: Node, depth: int) -> list[str]:
             continue  # inter-item whitespace / malformed children
         idx += 1
         marker = f"{idx}. " if ordered else "- "
-        buf: list[str] = []
+        buf: list = []
         sub: list[str] = []
         for grand in child.children:
             if type(grand) is not str and grand.tag in ("ul", "ol"):
                 sub.extend(_list_lines(grand, depth + 1))
             elif type(grand) is not str and grand.tag in BLOCK_TAGS:
-                buf.append(" " + _inline(grand) + " ")
+                buf.extend((" ", grand, " "))
             else:
-                buf.append(_inline_one(grand))
-        text = collapse_ws("".join(buf))
+                buf.append(grand)
+        text = collapse_ws(_inline(buf))
         if text or sub:
             lines.append("  " * depth + marker + text)
             lines.extend(sub)
@@ -167,7 +227,7 @@ def _table_block(table: Node) -> list[str]:
     grid: list[list[str]] = []
     for tr in _table_rows(table):
         cells = [
-            collapse_ws(_inline(c)).replace("|", "\\|")
+            collapse_ws(_inline(c.children)).replace("|", "\\|")
             for c in tr.children
             if type(c) is not str and c.tag in ("td", "th")
         ]
@@ -183,39 +243,53 @@ def _table_block(table: Node) -> list[str]:
     return ["\n".join(out)]
 
 
+def _flush(buf: list, out: list[str]) -> None:
+    text = collapse_ws(_inline(buf))
+    buf.clear()
+    if text:
+        out.append(text)
+
+
 def _container_blocks(node: Node, strip: bool) -> list[str]:
-    """Walk a block container's children: inline content accumulates into
-    a paragraph buffer that flushes at every block-element boundary (the
-    same boundary rule as html_extract._emit_paragraphs)."""
+    """Walk a block container's children: inline nodes accumulate into a
+    paragraph buffer that flushes at every block-element boundary (the
+    same boundary rule as html_extract._emit_paragraphs). Nested generic
+    containers write into the same block list, walked with a stack of
+    (child iterator, paragraph buffer) frames instead of recursion."""
     out: list[str] = []
-    buf: list[str] = []
-
-    def flush() -> None:
-        text = collapse_ws("".join(buf))
-        buf.clear()
-        if text:
-            out.append(text)
-
-    for child in node.children:
-        if type(child) is str or child.tag not in BLOCK_TAGS:
-            buf.append(_inline_one(child))
-            continue
-        flush()
-        out.extend(_block(child, strip))
-    flush()
+    stack = [(iter(node.children), [])]
+    while stack:
+        children, buf = stack[-1]
+        for child in children:
+            if type(child) is str or child.tag not in BLOCK_TAGS:
+                buf.append(child)
+                continue
+            _flush(buf, out)
+            if strip and child.tag in BOILERPLATE_TAGS:
+                continue
+            blocks = _own_block(child, strip)
+            if blocks is None:
+                stack.append((iter(child.children), []))
+                break
+            out.extend(blocks)
+        else:
+            stack.pop()
+            _flush(buf, out)
     return out
 
 
-def _block(node: Node, strip: bool) -> list[str]:
+def _own_block(node: Node, strip: bool) -> list[str] | None:
+    """Blocks of an element with a markdown form of its own; None for a
+    generic container (article/section/div/li/dd/...). Lists and quotes
+    recurse per level: each level widens every line below it, so output
+    grows with depth squared and the interpreter stack bounds the depth."""
     tag = node.tag
-    if strip and tag in BOILERPLATE_TAGS:
-        return []
     level = _HEADINGS.get(tag)
     if level:
-        text = collapse_ws(_inline(node))
+        text = collapse_ws(_inline(node.children))
         return ["#" * level + " " + text] if text else []
     if tag == "p":
-        text = collapse_ws(_inline(node))
+        text = collapse_ws(_inline(node.children))
         return [text] if text else []
     if tag in ("ul", "ol"):
         lines = _list_lines(node, 0)
@@ -237,8 +311,14 @@ def _block(node: Node, strip: bool) -> list[str]:
         return ["---"]
     if tag == "table":
         return _table_block(node)
-    # generic block container (article/section/div/li/dd/...)
-    return _container_blocks(node, strip)
+    return None
+
+
+def _block(node: Node, strip: bool) -> list[str]:
+    if strip and node.tag in BOILERPLATE_TAGS:
+        return []
+    blocks = _own_block(node, strip)
+    return _container_blocks(node, strip) if blocks is None else blocks
 
 
 def html_to_markdown(raw: bytes | str, aggressive: bool = True) -> str:

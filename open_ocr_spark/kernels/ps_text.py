@@ -47,6 +47,10 @@ _NUM_RE = re.compile(
     r"^[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?$"
     r"|^\d+#[0-9A-Za-z]+$"
 )
+# name literal and bare token: matched in place (``pat.match(src, i)``),
+# never on a slice, so tokenizing stays linear in the input
+_NAME_RE = re.compile(r"/[^\s()<>\[\]{}/%]*")
+_TOKEN_RE = re.compile(r"[^\s()<>\[\]{}/%]+")
 _ESC = {"n": "\n", "r": "\r", "t": "\t", "b": "\b", "f": "\f",
         "(": "(", ")": ")", "\\": "\\"}
 
@@ -137,14 +141,13 @@ def extract_ps_text(payload: bytes) -> str:
             # procedure/array/dict/hex-string/name machinery: a name's
             # chars are consumed below; brackets themselves are opaque
             if c == "/":
-                m = re.match(r"/[^\s()<>\[\]{}/%]*", src[i:])
-                i += m.end() if m else 1
+                i = _NAME_RE.match(src, i).end()
             else:
                 i += 1
             pending = None
             nums.clear()
         else:
-            m = re.match(r"[^\s()<>\[\]{}/%]+", src[i:])
+            m = _TOKEN_RE.match(src, i)
             tok = m.group(0) if m else src[i]
             i += len(tok)
             if _NUM_RE.match(tok):

@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-PAGES_COLUMNS = ("url", "warc_ts", "html", "text", "lang")
-
 
 def normalize_sources(df: DataFrame) -> DataFrame:
     """Resolve input-source priority to the canonical binary column.

@@ -183,3 +183,85 @@ def test_dispatch_md_composes_with_hocr_spans():
     )
     assert status == "ok"
     assert '"text": "# Doc"' in text and '"text": "hello"' in text
+
+
+# --- bounded depth -----------------------------------------------------------
+
+_MD = {"config_vars": {"output_format": "md"}}
+
+
+@pytest.mark.parametrize("page", [
+    b"<font><b>" * 5000 + b"deep text",          # 10k inline elements
+    b"<b> " * 10000 + b"deep text",
+    b"<p><a href=x>" * 5000 + b"deep text",
+    b"<div>" * 10000 + b"deep text",             # 10k block containers
+])
+def test_deep_nesting_extracts_ok_in_md(page):
+    text, status, err = extract_document(page, engine_args=_MD)
+    assert status == "ok", err
+    assert "deep text" in text
+
+
+# --- differential oracle: the frozen recursive renderer ----------------------
+# The iterative renderer must emit byte-identical markdown to
+# frozen_markdown on shallow pages, whose nesting the recursive one handles.
+
+import frozen_markdown  # noqa: E402
+from open_ocr_spark.fixtures import generate_pages  # noqa: E402
+
+_OPEN = ["p", "div", "section", "article", "nav", "footer", "aside",
+         "blockquote", "ul", "ol", "li", "h1", "h3", "pre", "code",
+         'a href="/x y"', "a", "b", "strong", "em", "i", "s", "del", "span",
+         "font", "br", 'img src="i.png" alt=" a  b "', "img", "table", "tr",
+         "td", "th", "thead", "hr", "dd", "main"]
+_TEXT = ["a", "bc d", " ", "  ", "\t", "\n", "\r\n", "\xa0", " ",
+         "\x1c", "\x0b", "*", "_", "`", "[", "]", "\\", "|", "&amp;",
+         "&nbsp;", " x ", "y\n"]
+_fragment = st.lists(
+    st.one_of(
+        st.sampled_from(_OPEN).map(lambda t: f"<{t}>"),
+        st.sampled_from(_OPEN).map(lambda t: f"</{t.split()[0]}>"),
+        st.sampled_from(_TEXT),
+    ),
+    max_size=60,
+).map("".join)
+
+
+@given(_fragment, st.booleans())
+@settings(max_examples=600, deadline=None)
+def test_markdown_matches_frozen_recursive_renderer(body, aggressive):
+    raw = _page(body)
+    assert html_to_markdown(raw, aggressive) == \
+        frozen_markdown.html_to_markdown(raw, aggressive)
+    assert html_to_markdown(body, aggressive) == \
+        frozen_markdown.html_to_markdown(body, aggressive)
+
+
+def test_markdown_matches_frozen_renderer_on_fixture_pages():
+    pages, _ = generate_pages(200)
+    for p in pages:
+        raw = p["html"]
+        if raw[:1] == b"<":
+            for aggressive in (True, False):
+                assert html_to_markdown(raw, aggressive) == \
+                    frozen_markdown.html_to_markdown(raw, aggressive)
+
+
+@pytest.mark.parametrize("body", [
+    '<p>y<a href="/x"> z </a>w</p>',          # link text loses its spaces
+    '<p>y<a> z </a>w</p>',                      # no href: spaces stay
+    '<p>y<a href="/x"> </a>w</p>',              # blank link text
+    '<p>y<b> z </b>w</p>',                      # spaces move outside markers
+    '<p>y<b><i> z</i> </b>w</p>',
+    '<p>y<b> </b>w<b></b>v</p>',
+    '<p><em>a<br>b</em><img src="s" alt="t">c<code>k`</code></p>',
+    '<ul><li>a<b> b</b><ul><li><i>c </i>d</li></ul></li></ul>',
+    '<blockquote><div><p>q <b>r</b></p><blockquote>s</blockquote></div>'
+    '</blockquote>',
+    '<table><tr><td><a href="/t"> c|d </a></td><th>e</th></tr></table>',
+    '<div>x<div>y<nav>n</nav><p>z</p>w</div>v</div>',
+])
+def test_markdown_matches_frozen_renderer_on_edge_cases(body):
+    for aggressive in (True, False):
+        assert html_to_markdown(_page(body), aggressive) == \
+            frozen_markdown.html_to_markdown(_page(body), aggressive)

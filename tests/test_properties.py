@@ -242,14 +242,14 @@ def test_dispatch_total_on_tar_like(payload):
 
 
 # --- complexity gate: linear time, bounded stack -----------------------------
-# Each adversarial family runs through the dispatch at size n and 4n, best
-# of 3; a linear kernel takes about 4x as long, a quadratic one 16x. The
-# bound of 6 leaves room for a noisy host, which also gets up to three
-# attempts (a quadratic kernel misses the bound on every one). The cyclic
-# GC is paused while timing: its collections land at arbitrary points and
-# move single timings by as much as the ratio under test. A page that
-# parsed quadratically would take minutes at 4n, so each run is also
-# capped in absolute time.
+# Each adversarial family (HTML pages, PostScript programs, markdown) runs
+# through the dispatch at size n and 4n, best of 3; a linear kernel takes
+# about 4x as long, a quadratic one 16x. The bound of 6 leaves room for a
+# noisy host, which also gets up to three attempts (a quadratic kernel
+# misses the bound on every one). The cyclic GC is paused while timing:
+# its collections land at arbitrary points and move single timings by as
+# much as the ratio under test. A page that parsed quadratically would
+# take minutes at 4n, so each run is also capped in absolute time.
 
 import gc  # noqa: E402
 import time  # noqa: E402
@@ -268,14 +268,23 @@ _FAMILIES = {
     "rawtext_unclosed": (lambda k: b"<script>" + b"</script " * k, 20000),
     # end tags that match nothing on a deep stack of open elements
     "stray_end_tags": (lambda k: b"<b>" * k + b"</i>" * k, 2500),
+    # PostScript: bare tokens (numbers, operators) and name literals, each
+    # once matched on a copy of the rest of the input (108 KB / 64 KB at n)
+    "ps_text_shows": (
+        lambda k: b"%!PS\n" + b"72 700 moveto (hello) show\n" * k, 4000),
+    "ps_name_literals": (lambda k: b"%!PS\n(x) show\n" + b"/F1 " * k, 16000),
+    # "md" output: every level of emphasis wraps everything below it, so
+    # rebuilding the inner string per level is quadratic in the depth
+    "md_deep_emphasis": (lambda k: b"<b> " * k + b"deep text", 10000),
 }
+_ENGINE_ARGS = {"md_deep_emphasis": {"config_vars": {"output_format": "md"}}}
 
 
-def _best_of_3(payload):
+def _best_of_3(payload, engine_args=None):
     best = float("inf")
     for _ in range(3):
         t = time.perf_counter()
-        _, status, err = extract_document(payload)
+        _, status, err = extract_document(payload, engine_args=engine_args)
         elapsed = time.perf_counter() - t
         assert status == "ok", err
         assert elapsed < 5.0, f"{len(payload)} bytes took {elapsed:.1f}s"
@@ -286,13 +295,14 @@ def _best_of_3(payload):
 @pytest.mark.parametrize("family", sorted(_FAMILIES))
 def test_html_kernel_scales_linearly(family):
     make, k = _FAMILIES[family]
+    engine_args = _ENGINE_ARGS.get(family)
     gc.collect()
     gc.disable()
     try:
         for _ in range(3):
-            small = _best_of_3(make(k))
+            small = _best_of_3(make(k), engine_args)
             assert small < 1.0, f"{family}: {small:.2f}s at n"
-            big = _best_of_3(make(4 * k))
+            big = _best_of_3(make(4 * k), engine_args)
             if big / small <= 6:
                 break
     finally:
@@ -309,16 +319,13 @@ def test_deep_nesting_extracts_ok():
 @settings(max_examples=200, deadline=None)
 def test_markup_fast_route_skips_no_format(tail):
     """The dispatch sends a payload opening with "<" straight to the HTML
-    branch unless it carries the tar magic at offset 257: no other sniff
-    of the format ladder may accept such a payload."""
+    branch unless it carries the tar magic at offset 257: no row of the
+    format table between the fast route and the final fallback may accept
+    such a payload."""
     from open_ocr_spark.kernels import dispatch as d
 
     payload = b"<" + tail
     if payload[257:262] == b"ustar":
         return
-    sniffs = (d.is_pdf, d._mbox_sniff, d._eml_sniff, d._ipynb_sniff,
-              d._latex_sniff, d._vtt_sniff, d._srt_sniff, d._is_image_payload)
-    assert not any(sniff(payload) for sniff in sniffs)
-    magics = (b"\x1f\x8b", b"{\\rtf", b"\xd0\xcf\x11\xe0", b"PK\x03\x04",
-              b"From ", b"%!PS")
-    assert not payload.startswith(magics)
+    rows = d._FORMATS[1:-1]
+    assert not [fmt for fmt, sniff, _ in rows if sniff(payload)]

@@ -235,3 +235,39 @@ def test_index_directives_name_boundary_and_cross_tag(spark):
     df = spark.createDataFrame(rows, "doc_id long, html string, headers string")
     got = {r["doc_id"]: r["noindex"] for r in index_directives(df).collect()}
     assert got == {0: False, 1: False, 2: True}
+
+
+def test_index_directives_attribute_must_start_at_a_boundary(spark):
+    from open_ocr_spark.dataops.robots import index_directives
+
+    rows = [
+        # data-name / data-content only END in name / content
+        (0, '<meta data-name="robots" content="noindex">', ""),
+        (1, '<meta content="noindex" data-name="robots">', ""),
+        (2, '<meta name="robots" data-content="noindex">', ""),
+        (3, '<meta data-content="noindex" name="robots">', ""),
+        # the real content attribute after a data-content one still counts
+        (4, '<meta name="robots" data-content="x" content="noindex">', ""),
+        # a quoted value or "/" also ends the previous attribute
+        (5, '<meta content="noindex"name="robots">', ""),
+        (6, '<meta/name="robots" content="noindex">', ""),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, html string, headers string")
+    got = {r["doc_id"]: r["noindex"] for r in index_directives(df).collect()}
+    assert got == {0: False, 1: False, 2: False, 3: False, 4: True, 5: True,
+                   6: True}
+
+
+def test_index_directives_binary_headers_column(spark):
+    from open_ocr_spark.dataops.robots import index_directives
+
+    rows = [
+        (0, b"<p>x</p>", bytearray(b"X-Robots-Tag: noindex\r\n")),
+        (1, b'<meta name="robots" content="nofollow">', None),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, html binary, headers binary")
+    got = {
+        r["doc_id"]: (r["noindex"], r["nofollow"], r["from_header"])
+        for r in index_directives(df).collect()
+    }
+    assert got == {0: (True, False, True), 1: (False, True, False)}

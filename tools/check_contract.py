@@ -107,7 +107,7 @@ OVERFLOW_OK: dict[int, list[str]] = {
     # replica-green (rows+schema+hash) via this tool at sf0.001 AND
     # sf0.01.  host_template_lines is NOT here: it was promoted into
     # slot 50 (binary_payload_stats vacated — hash-green since r4), so
-    # only these two ride the exemption.
+    # only these twelve ride the exemption.
     5: [
         "reflow_text",
         "mojibake_repair",
