@@ -4,9 +4,11 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 Modes:
   python bench.py                       one run, one JSON line (driver mode)
   python bench.py --scaling             N-vs-4N protocol (BASELINE.md): runs
-                                        the extraction job at local[8] and
-                                        local[32] in fresh JVMs, reports
-                                        docs/sec at both + scaling efficiency
+                                        the extraction job at local[N] and
+                                        local[4N], N = nproc/4 (1 and 4 on
+                                        a 4-vCPU host), in fresh JVMs,
+                                        reports docs/sec at both + scaling
+                                        efficiency
   python bench.py --master local[8]     explicit master (used by --scaling)
 
 The headline metric is extraction throughput: documents wrapped in
@@ -49,8 +51,19 @@ def _default_sf_dir() -> str:
     return preferred
 
 
+def _default_driver_mem() -> str:
+    """A quarter of MemTotal for the driver JVM heap: in local mode the
+    Python workers, the page cache and off-heap buffers share the rest."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{max(1024, int(line.split()[1]) // 1024 // 4)}m"
+    return "8g"
+
+
+NPROC = len(os.sched_getaffinity(0))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", _default_sf_dir())
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(NPROC))
 REPLICATION = int(os.environ.get("BENCH_REPLICATION", "40"))
 WARMUP = os.environ.get("BENCH_WARMUP", "1") == "1"
 
@@ -330,11 +343,10 @@ def run_once(
     from open_ocr_spark.queries import QUERIES
 
     replication = replication or REPLICATION
-    # single-JVM local mode: 32 concurrent tasks buffering html payloads
-    # thrash a small heap (22% of stage runtime went to GC at 16g);
-    # 48g keeps GC under 5% — a real cluster sizes executor memory the
-    # same way (~1.5g/core)
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
+    # single-JVM local mode: concurrent tasks buffering html payloads
+    # thrash a small heap (22% of stage runtime went to GC at 16g with 32
+    # tasks); the default heap is a quarter of the box's memory
+    os.environ.setdefault("SPARK_DRIVER_MEM", _default_driver_mem())
     cores = master.split("[")[1].rstrip("]") if "[" in master else "32"
     shuffle = 32 if cores == "*" else max(8, int(cores))
     spark = get_spark(app_name="bench", master=master, shuffle_partitions=shuffle)
@@ -486,7 +498,7 @@ def cpu_control(procs: int, iters: int = 20_000_000) -> float:
     return round(procs * iters / wall / 1e6, 1)
 
 
-def run_scaling(sf_dir: str, n_small: int = 8, n_big: int = 32,
+def run_scaling(sf_dir: str, n_small: int, n_big: int,
                 replication: int = 2000, iters: int = 5) -> dict:
     """BASELINE.md protocol: same job, same input, local[N] vs local[4N];
     efficiency = (throughput_4N / throughput_N) / 4, reported alongside the
@@ -599,7 +611,7 @@ def run_scaling(sf_dir: str, n_small: int = 8, n_big: int = 32,
 def main():
     args = sys.argv[1:]
     if "--scaling" in args:
-        n_small = 8
+        n_small = max(1, NPROC // 4)
         # size extraction to ~4M docs per timed round: long enough that the
         # host's multi-second throttle bursts average out inside a round,
         # short enough for 5 interleaved (N, 4N) pairs in ~20 min

@@ -24,10 +24,10 @@ main-content roots are collected in document order at parse time
 
 from __future__ import annotations
 
-import codecs
 import html as _html
 import re
 from collections import defaultdict
+from functools import lru_cache
 from html.parser import HTMLParser
 from operator import length_hint
 
@@ -79,14 +79,24 @@ def sniff_charset(raw: bytes) -> str:
         window = _OPEN_COMMENT_RE.sub(b"", _HTML_COMMENT_RE.sub(b"", window))
     m = _META_CHARSET_RE.search(window)
     if m:
-        label = m.group(1).decode("ascii").lower()
-        label = _CHARSET_ALIASES.get(label, label)
-        try:
-            codecs.lookup(label)
-            return label
-        except LookupError:
-            return "utf-8"
+        return _text_codec(m.group(1).decode("ascii").lower()) or "utf-8"
     return "utf-8"
+
+
+@lru_cache(maxsize=256)
+def _text_codec(label: str) -> str | None:
+    """The Python codec for a lower-case charset label after the WHATWG
+    alias classes, or None when the label is unknown. A label also counts
+    as unknown when its codec cannot decode page bytes under
+    errors="replace": binary codecs (rot13, hex, base64) raise
+    LookupError from bytes.decode, and idna, punycode and undefined
+    raise UnicodeError even with the replace handler."""
+    codec = _CHARSET_ALIASES.get(label, label)
+    try:
+        b"\x80\xff<a>".decode(codec, errors="replace")
+    except (LookupError, ValueError):
+        return None
+    return codec
 
 
 def decode_html_bytes(raw: bytes | bytearray | memoryview) -> str:
@@ -100,14 +110,10 @@ def codec_for_label(label: str) -> str | None:
     Content-Type parameter), normalized through the same WHATWG label
     classes the meta prescan uses — per the spec the transport layer
     sits ABOVE the sniff, so a valid header label wins over BOM/meta.
-    Unknown labels return None: the caller falls back to sniffing (the
+    Unknown labels (and labels no page can be decoded with, see
+    _text_codec) return None: the caller falls back to sniffing (the
     spec's behavior for an unrecognized label), never errors."""
-    norm = _CHARSET_ALIASES.get(label.strip().lower(), label.strip().lower())
-    try:
-        codecs.lookup(norm)
-        return norm
-    except LookupError:
-        return None
+    return _text_codec(label.strip().lower())
 
 
 # Elements whose entire subtree carries no extractable text.

@@ -74,6 +74,13 @@ _ESCAPES = {"%": "%", "&": "&", "_": "_", "$": "$", "#": "#",
 
 _COMMENT_RE = re.compile(r"(?<!\\)((?:\\\\)*)%[^\n]*\n?")
 _CMD_RE = re.compile(r"[A-Za-z]+\*?")
+# A comment (same opener rule as _COMMENT_RE, kept as is) or a verbatim
+# block: scanning both in one pass keeps openers inside comments inert.
+_VERBATIM_RE = re.compile(
+    r"(?<!\\)(?:\\\\)*%[^\n]*"
+    r"|\\begin\{verbatim\}(?P<body>.*?)(?:\\end\{verbatim\}|\Z)",
+    re.S,
+)
 
 
 def is_latex(payload: bytes) -> bool:
@@ -147,9 +154,12 @@ def _find_env_end(s: str, i: int, env: str) -> tuple[str, int]:
     return s[i:], len(s)
 
 
-def _render(s: str, depth: int, raw: list[str]) -> str:
+def _render(s: str, depth: int, raw: list[str], in_table: bool = False) -> str:
     """One pass over a token stream; verbatim/math blocks park in
-    ``raw`` behind \x00 sentinels so whitespace collapse skips them."""
+    ``raw`` behind \x00 sentinels so whitespace collapse skips them.
+    Inside a tabular (``in_table``) an unescaped ``&`` is a cell
+    separator and renders as a space; an escaped one stays a literal
+    ampersand."""
     if depth > _MAX_DEPTH:
         raise ValueError(f"latex nesting exceeds {_MAX_DEPTH}")
     out: list[str] = []
@@ -164,6 +174,10 @@ def _render(s: str, depth: int, raw: list[str]) -> str:
         if size > _MAX_TEXT:
             raise ValueError(f"rendered latex text exceeds {_MAX_TEXT}")
         out.append(piece)
+
+    def cell(text: str) -> str:
+        # raw (unrendered) text inside a tabular: every & separates cells
+        return text.replace("&", " ") if in_table else text
 
     while i < n:
         c = s[i]
@@ -181,7 +195,7 @@ def _render(s: str, depth: int, raw: list[str]) -> str:
             if nxt == "(":
                 j = s.find("\\)", i + 2)
                 j = n if j < 0 else j
-                emit(s[i + 2:j])
+                emit(cell(s[i + 2:j]))
                 i = min(j + 2, n)
                 continue
             if nxt == "[":
@@ -215,13 +229,12 @@ def _render(s: str, depth: int, raw: list[str]) -> str:
                     raw.append(" ".join(body.split()))
                     emit(f"\n\n\x00{len(raw) - 1}\x00\n\n")
                 elif env in ("tabular", "tabular*"):
-                    cells = _render(body, depth + 1, raw)
-                    cells = cells.replace("&", " ")
-                    emit("\n\n" + cells + "\n\n")
+                    emit("\n\n" + _render(body, depth + 1, raw, True)
+                               + "\n\n")
                 else:
                     # list/quote/figure/unknown: contents render,
                     # paragraph-separated from the surroundings
-                    emit("\n\n" + _render(body, depth + 1, raw)
+                    emit("\n\n" + _render(body, depth + 1, raw, in_table)
                                + "\n\n")
             elif base == "end":
                 _, i = _brace_group(s, i)  # unbalanced \end: drop
@@ -231,11 +244,11 @@ def _render(s: str, depth: int, raw: list[str]) -> str:
             elif base in _SECTIONING:
                 i = _skip_opt(s, i)
                 arg, i = _brace_group(s, i)
-                emit("\n\n" + _render(arg or "", depth + 1, raw)
+                emit("\n\n" + _render(arg or "", depth + 1, raw, in_table)
                            + "\n\n")
             elif base in _KEEP_INNER:
                 arg, i = _brace_group(s, i)
-                emit(_render(arg or "", depth + 1, raw))
+                emit(_render(arg or "", depth + 1, raw, in_table))
             elif base in _DROP_WITH_ARGS:
                 while True:
                     j = _skip_opt(s, i)
@@ -260,11 +273,11 @@ def _render(s: str, depth: int, raw: list[str]) -> str:
                 raw.append(" ".join(body.split()))
                 emit(f"\n\n\x00{len(raw) - 1}\x00\n\n")
             else:
-                emit(body)
+                emit(cell(body))
             i = min(j + open_len, n)
         elif c == "{":
             arg, i = _brace_group(s, i)
-            emit(_render(arg or "", depth + 1, raw))
+            emit(_render(arg or "", depth + 1, raw, in_table))
         elif c == "}":
             i += 1  # stray close brace: drop
         elif c == "~":
@@ -283,7 +296,7 @@ def _render(s: str, depth: int, raw: list[str]) -> str:
             emit("\u201d")
             i += 2
         else:
-            emit(c)
+            emit(" " if in_table and c == "&" else c)
             i += 1
     return "".join(out)
 
@@ -299,16 +312,16 @@ def extract_latex_text(payload: bytes) -> str:
     raw: list[str] = []
 
     def _park_verbatim(m: re.Match) -> str:
-        raw.append(m.group(1).strip("\n"))
+        if m.group("body") is None:
+            return m.group(0)  # a comment, stripped below
+        raw.append(m.group("body").strip("\n"))
         return f"\n\n\x00{len(raw) - 1}\x00\n\n"
 
     # park verbatim bodies BEFORE the comment strip: '%' inside
     # verbatim is content, and the byte-verbatim promise must survive
-    # the global comment pass (pinned by test)
-    src = re.sub(
-        r"\\begin\{verbatim\}(.*?)(?:\\end\{verbatim\}|\Z)",
-        _park_verbatim, src, flags=re.S,
-    )
+    # the global comment pass (pinned by test); a comment line is
+    # matched and left in place, so a commented-out opener parks nothing
+    src = _VERBATIM_RE.sub(_park_verbatim, src)
     src = _strip_comments(src)
     m = re.search(r"\\begin\{document\}", src)
     if not m:

@@ -9,8 +9,10 @@ and the one MapInArrow node; there is no shuffle between preprocessor steps
 at all (SURVEY.md §3.2 recast).
 
 Design rules (north_rule): no per-row Python on the Spark side — the kernel
-receives whole Arrow batches; per-row work happens inside compiled
-pandas/pyarrow loops over those batches. Output schema is fixed and stable.
+receives whole Arrow batches; per-row work happens inside Python loops over
+those batches. `_extract_batches` is the extraction kernel's own loop;
+`map_rows` is the one runner every other row kernel goes through. Output
+schema is fixed and stable.
 """
 
 from __future__ import annotations
@@ -139,6 +141,38 @@ def extract_stage(
         f", {c} {pages.schema[c].dataType.simpleString()}" for c in passthrough
     )
     return pages.select(*cols).mapInArrow(_extract_batches, schema)
+
+
+def map_rows(df: DataFrame, fn, schema) -> DataFrame:
+    """Run the row function ``fn`` over ``df`` as one mapInArrow stage.
+
+    Row contract: ``fn(*row)`` receives one input row as plain Python
+    values in ``df``'s column order (``None`` for null, ``bytes`` for
+    binary, lists for arrays, ``(key, value)`` pairs for maps, datetimes
+    for timestamps) and returns an iterable of zero or more output
+    tuples in ``schema`` order (a DDL string or a StructType). Nulls,
+    strict raises and error-as-value rows are the row function's
+    business; the runner only owns the batch loop and the two Arrow
+    conversions, so rows cross into Python in exactly one place."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    types = arrow_schema.types
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = zip(*(col.to_pylist() for col in batch.columns))
+            out = [r for row in rows for r in fn(*row)]
+            cols = list(zip(*out)) if out else [()] * len(types)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, t) for c, t in zip(cols, types)],
+                schema=arrow_schema,
+            )
+
+    return df.mapInArrow(run, schema)
 
 
 def mock_stage(pages: DataFrame) -> DataFrame:

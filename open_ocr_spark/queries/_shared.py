@@ -1,15 +1,33 @@
-"""Shared fixtures for the query registry: the parquet table loader and the
-boilerplate-wrapped pages table every extraction query derives from
-`documents` (all Catalyst concat/encode, zero Python)."""
+"""Shared fixtures for the query registry: the parquet table loader, the
+writer-twin payload row kernel, and the boilerplate-wrapped pages table
+every extraction query derives from `documents` (all Catalyst
+concat/encode, zero Python)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from open_ocr_spark.pipeline.stages import map_rows
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def doc_payloads(
+    spark: SparkSession,
+    sf_dir: str,
+    build,
+    *inputs,
+    schema: str = "doc_id long, payload binary",
+) -> DataFrame:
+    """One writer-twin payload per document: ``build(doc_id, *inputs) ->
+    bytes`` runs as a row kernel over the documents table, where
+    ``inputs`` are the further columns (or expressions) it reads.
+    ``schema`` names the two output columns."""
+    docs = _t(spark, sf_dir, "documents").select("doc_id", *inputs)
+    return map_rows(docs, lambda i, *a: [(i, build(i, *a))], schema)
 
 
 _WRAP_PREFIX = (

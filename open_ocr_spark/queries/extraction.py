@@ -7,7 +7,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from open_ocr_spark.pipeline.stages import extract_stage
-from open_ocr_spark.queries._shared import _WRAP_PREFIX, _WRAP_SUFFIX, _t, pages_from_documents
+from open_ocr_spark.queries._shared import (
+    _WRAP_PREFIX,
+    _WRAP_SUFFIX,
+    _t,
+    doc_payloads,
+    pages_from_documents,
+)
 
 ORACLES: dict[str, str] = {}
 
@@ -68,41 +74,16 @@ def q_extract_docx_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     magic-byte routing must pick the DOCX branch and return the text
     byte-exactly.  A zip-walk, run-concatenation, w:tab/w:br or
     entity-decode bug changes extracted_text and breaks the hash."""
-    import pandas as pd
-
-    def _docx_wrap(batches):
+    def build(i: int, text) -> bytes:
         from open_ocr_spark.kernels.docx_text import build_docx
 
-        for pdf in batches:
-            out = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                paras = [
-                    text if text is not None else "",
-                    f"Doc {i}\t<tagged & checked>",
-                ]
-                out.append(
-                    (i, f"https://docs.example.com/docx/{i}",
-                     bytearray(build_docx(paras)))
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "url", "html"]
-            )
+        return build_docx([
+            text if text is not None else "",
+            f"Doc {i}\t<tagged & checked>",
+        ])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pages = docs.mapInPandas(
-        _docx_wrap, "doc_id long, url string, html binary"
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        "html",
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
+    return _twin_extract(
+        spark, sf_dir, "https://docs.example.com/docx/", build, "text"
     )
 
 
@@ -115,42 +96,17 @@ def q_extract_xlsx_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     magic-byte routing must distinguish the workbook from the other
     office zips and return tab/newline/blank-line flat text
     byte-exactly."""
-    import pandas as pd
-
-    def _xlsx_wrap(batches):
+    def build(i: int, text) -> bytes:
         from open_ocr_spark.kernels.docx_text import build_xlsx
 
-        for pdf in batches:
-            out = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                t = text if text is not None else ""
-                sheets = [
-                    [["Doc", str(i)], [t], ["<cells & rows>", "", "-3.5"]],
-                    [["Doc", "total"], [str(i), str(i)]],
-                ]
-                out.append(
-                    (i, f"https://docs.example.com/xlsx/{i}",
-                     bytearray(build_xlsx(sheets)))
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "url", "html"]
-            )
+        t = text if text is not None else ""
+        return build_xlsx([
+            [["Doc", str(i)], [t], ["<cells & rows>", "", "-3.5"]],
+            [["Doc", "total"], [str(i), str(i)]],
+        ])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pages = docs.mapInPandas(
-        _xlsx_wrap, "doc_id long, url string, html binary"
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        "html",
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
+    return _twin_extract(
+        spark, sf_dir, "https://docs.example.com/xlsx/", build, "text"
     )
 
 
@@ -163,20 +119,10 @@ def q_extract_glyph_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching OCR over the decoded pixels must recover the text exactly.
     The oracle is the font-normalization transform (upper, drop
     unsupported glyphs, 96-glyph line, trailing-pad strip)."""
-    import pandas as pd
-
-    def _render(batches):
+    def build(i: int, clean: str) -> bytes:
         from open_ocr_spark.kernels.glyph_ocr import render_text_png
 
-        for pdf in batches:
-            out = []
-            for i, t in zip(pdf["doc_id"], pdf["clean"]):
-                i = int(i)
-                out.append(
-                    (i, f"https://docs.example.com/scan/{i}",
-                     bytearray(render_text_png(t)))
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "url", "html"])
+        return render_text_png(clean)
 
     clean = F.rtrim(
         F.substring(
@@ -189,22 +135,9 @@ def q_extract_glyph_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
             96,
         )
     )
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", clean.alias("clean")
-    )
-    pages = docs.mapInPandas(
-        _render, "doc_id long, url string, html binary"
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        "html",
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
+    return _twin_extract(
+        spark, sf_dir, "https://docs.example.com/scan/", build,
+        clean.alias("clean"),
     )
 
 
@@ -216,44 +149,18 @@ def q_extract_epub_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine-order reader roundtrips; each chapter runs through the
     engine's own HTML boilerplate-strip kernel, so the oracle is the
     same normalization identity extract_main_text uses, per chapter."""
-    import pandas as pd
-
-    def _epub_wrap(batches):
+    def build(i: int, text) -> bytes:
         from open_ocr_spark.kernels.docx_text import build_epub
 
-        for pdf in batches:
-            out = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                t = text if text is not None else ""
-                ch1 = (_WRAP_PREFIX + t + _WRAP_SUFFIX).encode("utf-8")
-                ch2 = (
-                    _WRAP_PREFIX
-                    + f"Chapter {i} of the epub & appendix"
-                    + _WRAP_SUFFIX
-                ).encode("utf-8")
-                out.append(
-                    (i, f"https://docs.example.com/epub/{i}",
-                     bytearray(build_epub([ch1, ch2])))
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "url", "html"]
-            )
+        t = text if text is not None else ""
+        ch1 = (_WRAP_PREFIX + t + _WRAP_SUFFIX).encode("utf-8")
+        ch2 = (
+            _WRAP_PREFIX + f"Chapter {i} of the epub & appendix" + _WRAP_SUFFIX
+        ).encode("utf-8")
+        return build_epub([ch1, ch2])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pages = docs.mapInPandas(
-        _epub_wrap, "doc_id long, url string, html binary"
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        "html",
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
+    return _twin_extract(
+        spark, sf_dir, "https://docs.example.com/epub/", build, "text"
     )
 
 
@@ -264,41 +171,16 @@ def q_extract_pptx_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     paragraphs with an a:br line break and XML entities; magic-byte
     routing must distinguish the deck from DOCX/ODT zips and return all
     slides' text in numeric slide order, byte-exactly."""
-    import pandas as pd
-
-    def _pptx_wrap(batches):
+    def build(i: int, text) -> bytes:
         from open_ocr_spark.kernels.docx_text import build_pptx
 
-        for pdf in batches:
-            out = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                slides = [
-                    [text if text is not None else ""],
-                    [f"Slide {i}", "<deck & notes>\nend"],
-                ]
-                out.append(
-                    (i, f"https://docs.example.com/pptx/{i}",
-                     bytearray(build_pptx(slides)))
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "url", "html"]
-            )
+        return build_pptx([
+            [text if text is not None else ""],
+            [f"Slide {i}", "<deck & notes>\nend"],
+        ])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pages = docs.mapInPandas(
-        _pptx_wrap, "doc_id long, url string, html binary"
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        "html",
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
+    return _twin_extract(
+        spark, sf_dir, "https://docs.example.com/pptx/", build, "text"
     )
 
 
@@ -310,39 +192,13 @@ def q_extract_odt_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     run-length-space + entity line; magic-byte routing must
     disambiguate ODT from DOCX inside the shared PK branch and return
     the text byte-exactly."""
-    import pandas as pd
-
-    def _odt_wrap(batches):
+    def build(i: int, text) -> bytes:
         from open_ocr_spark.kernels.docx_text import build_odt
 
-        for pdf in batches:
-            out = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                paras = [
-                    text if text is not None else "",
-                    f"Odt {i}\t<open & doc>",
-                ]
-                out.append(
-                    (i, f"https://docs.example.com/odt/{i}",
-                     bytearray(build_odt(paras)))
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "url", "html"])
+        return build_odt([text if text is not None else "", f"Odt {i}\t<open & doc>"])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pages = docs.mapInPandas(
-        _odt_wrap, "doc_id long, url string, html binary"
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        "html",
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
+    return _twin_extract(
+        spark, sf_dir, "https://docs.example.com/odt/", build, "text"
     )
 
 
@@ -356,39 +212,13 @@ def q_extract_rtf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     the text byte-exactly.  A tokenizer, destination-skip, \\uc
     fallback, or \\par-convention bug changes extracted_text and breaks
     the hash."""
-    import pandas as pd
-
-    def _rtf_wrap(batches):
+    def build(i: int, text) -> bytes:
         from open_ocr_spark.kernels.rtf_text import build_rtf
 
-        for pdf in batches:
-            out = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                paras = [
-                    text if text is not None else "",
-                    f"Rtf {i}\t«rich & text»",
-                ]
-                out.append(
-                    (i, f"https://docs.example.com/rtf/{i}",
-                     bytearray(build_rtf(paras)))
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "url", "html"])
+        return build_rtf([text if text is not None else "", f"Rtf {i}\t«rich & text»"])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pages = docs.mapInPandas(
-        _rtf_wrap, "doc_id long, url string, html binary"
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        "html",
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
+    return _twin_extract(
+        spark, sf_dir, "https://docs.example.com/rtf/", build, "text"
     )
 
 
@@ -1071,19 +901,11 @@ def q_charset_transport(spark: SparkSession, sf_dir: str) -> DataFrame:
     third carry none — both of those fall to the BOM/meta sniff, whose
     utf-8 errors=replace turns each accented byte into U+FFFD.  The
     oracle states all three outcomes closed-form."""
-    import pandas as pd
+    def build(i: int) -> bytes:
+        html = f"<html><body><p>Café {i} façade</p></body></html>"
+        return html.encode("cp1252")
 
-    def _cp1252_wrap(batches):
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                html = f"<html><body><p>Café {i} façade</p></body></html>"
-                out.append((i, bytearray(html.encode("cp1252"))))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_cp1252_wrap, "doc_id long, payload binary")
+    raw = doc_payloads(spark, sf_dir, build)
     d = F.col("doc_id")
     pages = raw.select(
         F.concat(F.lit("https://cs.example.com/p/"), d.cast("string")).alias(
@@ -1130,40 +952,18 @@ def q_extract_doc_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass).  The which-table FIB bit alternates per row (0Table/1Table
     both exercised).  Routed by CFB magic through the standard engine
     dispatch; closed-form oracle."""
-    import pandas as pd
-
-    def _doc_wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.kernels.doc_text import build_doc
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                doc = build_doc(
-                    [
-                        (f"Doc {i} café intro.\r", True),
-                        (f"Pièce № {i % 7} finale.\r", False),
-                    ],
-                    which_table=i % 2,
-                )
-                out.append((i, bytearray(doc)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+        return build_doc(
+            [
+                (f"Doc {i} café intro.\r", True),
+                (f"Pièce № {i % 7} finale.\r", False),
+            ],
+            which_table=i % 2,
+        )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_doc_wrap, "doc_id long, payload binary")
-    pages = raw.select(
-        F.concat(F.lit("https://docs.example.com/w/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        F.col("payload").alias("html"),
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/w/", build)
 
 
 ORACLES["extract_doc_text"] = """
@@ -1183,39 +983,15 @@ def q_extract_ppt_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     nests one cp1252 TextBytesAtom and one UTF-16 TextCharsAtom (holding
     a non-cp1252 character) inside a Document container.  Routed by CFB
     magic + directory through the standard dispatch."""
-    import pandas as pd
-
-    def _wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.kernels.doc_text import build_ppt
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = build_ppt(
-                    [
-                        (f"Slide {i} café title", False),
-                        (f"Body № {i % 9} text", True),
-                    ]
-                )
-                out.append((i, bytearray(blob)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+        return build_ppt([
+            (f"Slide {i} café title", False),
+            (f"Body № {i % 9} text", True),
+        ])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_wrap, "doc_id long, payload binary")
-    pages = raw.select(
-        F.concat(F.lit("https://docs.example.com/s/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        F.col("payload").alias("html"),
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/s/", build)
 
 
 ORACLES["extract_ppt_text"] = """
@@ -1235,40 +1011,16 @@ def q_extract_xls_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     rich-run-annotated latin string (the skip arithmetic must be exact),
     a UTF-16 string with a non-cp1252 character, and a plain tail.
     Routed by CFB magic + directory through the standard dispatch."""
-    import pandas as pd
-
-    def _wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.kernels.doc_text import build_xls
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = build_xls(
-                    [
-                        (f"Cell {i} café", False),
-                        (f"Wide № {i % 5}", True),
-                        (f"tail {i % 3}", False),
-                    ]
-                )
-                out.append((i, bytearray(blob)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+        return build_xls([
+            (f"Cell {i} café", False),
+            (f"Wide № {i % 5}", True),
+            (f"tail {i % 3}", False),
+        ])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_wrap, "doc_id long, payload binary")
-    pages = raw.select(
-        F.concat(F.lit("https://docs.example.com/x/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        F.col("payload").alias("html"),
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/x/", build)
 
 
 ORACLES["extract_xls_text"] = """
@@ -1289,40 +1041,17 @@ def q_extract_msg_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     UTF-16 (001F) subject/body with a non-cp1252 character, odd ones the
     8-bit 001E form — and the frozen subject/blank/body contract routes
     through the standard CFB dispatch."""
-    import pandas as pd
-
-    def _wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.kernels.doc_text import build_msg
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                wide = i % 2 == 0
-                mark = "№" if wide else "No"
-                blob = build_msg(
-                    f"Re: item {mark} {i % 11}",
-                    f"Body for doc {i} café.\rSecond line.",
-                    wide=wide,
-                )
-                out.append((i, bytearray(blob)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+        wide = i % 2 == 0
+        return build_msg(
+            f"Re: item {'№' if wide else 'No'} {i % 11}",
+            f"Body for doc {i} café.\rSecond line.",
+            wide=wide,
+        )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_wrap, "doc_id long, payload binary")
-    pages = raw.select(
-        F.concat(F.lit("https://docs.example.com/m/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        F.col("payload").alias("html"),
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/m/", build)
 
 
 ORACLES["extract_msg_text"] = """
@@ -1338,20 +1067,16 @@ ORACLES["extract_msg_text"] = """
     """
 
 
-def _twin_extract(spark: SparkSession, sf_dir: str, url_prefix: str, build):
-    """Shared writer-twin scaffold (r5): ``build(doc_id) -> payload
-    bytes``, wrapped as pages and run through the REAL extraction stage.
-    Every container-format query uses this one shape, so the thing each
-    query varies is exactly the thing under test — the payload."""
-    import pandas as pd
-
-    def _wrap(batches):
-        for pdf in batches:
-            out = [(int(i), bytearray(build(int(i)))) for i in pdf["doc_id"]]
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_wrap, "doc_id long, payload binary")
+def _twin_extract(
+    spark: SparkSession, sf_dir: str, url_prefix: str, build, *inputs
+):
+    """Shared writer-twin scaffold (r5): ``build(doc_id, *inputs) ->
+    payload bytes``, where ``inputs`` are the documents columns (or
+    expressions) it reads, wrapped as pages and run through the REAL
+    extraction stage. Every container-format query uses this one shape,
+    so the thing each query varies is exactly the thing under test —
+    the payload."""
+    raw = doc_payloads(spark, sf_dir, build, *inputs)
     pages = raw.select(
         F.concat(F.lit(url_prefix),
                  F.col("doc_id").cast("string")).alias("url"),
@@ -1554,26 +1279,17 @@ def q_csv_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a 2x3 grid written by the stdlib csv writer twin carrying a
     quoted comma, escaped quotes, an embedded newline, and an empty
     field — the closed-form oracle pins every grammar rule."""
-    import pandas as pd
-
-    def _wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.kernels.csv_text import build_csv
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = build_csv([
-                    [f"v {i}", f"a,b {i % 5}", f'He said "hi" {i % 3}'],
-                    [f"line1\nline2 {i}", "", f"tail {i % 7}"],
-                ])
-                out.append((i, bytearray(blob)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+        return build_csv([
+            [f"v {i}", f"a,b {i % 5}", f'He said "hi" {i % 3}'],
+            [f"line1\nline2 {i}", "", f"tail {i % 7}"],
+        ])
 
     from open_ocr_spark.kernels.csv_text import csv_cells
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_wrap, "doc_id long, payload binary")
+    raw = doc_payloads(spark, sf_dir, build)
     return (
         csv_cells(raw, payload_col="payload")
         .orderBy("doc_id", "row_idx", "col_idx")

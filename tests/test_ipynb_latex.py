@@ -253,3 +253,27 @@ def test_latex_tabular_star_width_and_spec_are_layout():
     out = extract_latex_text(doc)
     assert "10cm" not in out and "ll" not in out
     assert "a b c d" in out
+
+
+def test_latex_commented_verbatim_opener_is_inert():
+    # a commented-out opener in the preamble must not swallow the body
+    doc = (b"\\documentclass{article}\n% \\begin{verbatim}\n"
+           b"\\begin{document}\nHello world.\n\\end{document}\n")
+    assert extract_latex_text(doc) == "Hello world."
+    # ... nor a commented opener after a real verbatim block
+    doc2 = (b"\\documentclass{article}\n\\begin{document}\n"
+            b"\\begin{verbatim}\n100% kept\n\\end{verbatim}\n"
+            b"% \\begin{verbatim} gone\nAfter.\n\\end{document}\n")
+    assert extract_latex_text(doc2) == "100% kept\n\nAfter."
+
+
+def test_latex_tabular_escaped_ampersand_is_content():
+    doc = (b"\\documentclass{article}\n\\begin{document}\n"
+           b"\\begin{tabular}{ll} AT\\&T & Corp \\end{tabular}\n"
+           b"\\end{document}\n")
+    assert extract_latex_text(doc) == "AT&T Corp"
+    # unescaped & stays a cell separator, also inside groups and $..$
+    doc2 = (b"\\documentclass{article}\n\\begin{document}\n"
+            b"\\begin{tabular}{lll} {x & y} & $a&b$ & \\textbf{R\\&D} "
+            b"\\end{tabular}\n\\end{document}\n")
+    assert extract_latex_text(doc2) == "x y a b R&D"

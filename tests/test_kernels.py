@@ -681,6 +681,33 @@ def test_sniff_charset_skips_commented_meta():
     assert sniff_charset(b'<!-- oops <meta charset="latin1">') == "utf-8"
 
 
+# Python knows these labels, but none can decode a page with
+# errors="replace": idna raises UnicodeError, the rest are binary codecs
+_UNDECODABLE_LABELS = ["idna", "rot13", "hex", "base64"]
+
+
+@pytest.mark.parametrize("label", _UNDECODABLE_LABELS)
+@pytest.mark.parametrize("output_format", [None, "md"])
+def test_undecodable_charset_labels_count_as_unknown(label, output_format):
+    from open_ocr_spark.kernels.htmltree import codec_for_label, sniff_charset
+
+    assert sniff_charset(f"<meta charset={label}>".encode()) == "utf-8"
+    assert codec_for_label(label.upper()) is None
+    fmt = {"output_format": output_format} if output_format else {}
+    body = "<p>Café page text</p></body></html>"
+    meta_page = f"<html><head><meta charset={label}></head><body>{body}"
+    # meta prescan: falls back to utf-8
+    assert extract_document(
+        meta_page.encode(), engine_args={"config_vars": fmt}
+    ) == ("Café page text", "ok", "")
+    # transport label: falls back to the sniff (here, the meta cp1252)
+    page = f"<html><head><meta charset=latin1></head><body>{body}"
+    assert extract_document(
+        page.encode("cp1252"),
+        engine_args={"config_vars": {"charset": label, **fmt}},
+    ) == ("Café page text", "ok", "")
+
+
 def test_decode_html_bytes_cp1252_and_utf16():
     from open_ocr_spark.kernels.htmltree import decode_html_bytes
 

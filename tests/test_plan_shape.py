@@ -500,7 +500,7 @@ def test_microdata_and_csv_kernels_are_single_pass(spark):
     )
     for fn in (microdata_items, csv_cells):
         plan = plan_of(fn(pages))
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
         assert "Exchange" not in plan
 
 
